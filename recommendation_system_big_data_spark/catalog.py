@@ -1,12 +1,40 @@
-"""Table catalog for the driver-generated testdata (TESTDATA.md).
+"""Table catalog for the driver-generated testdata (TESTDATA.md), and the
+engine's one session cache.
 
 The reference hand-loads CSVs with explicit StructTypes (model-als.py:17-103);
 here the primary at-rest format is Parquet (columnar, statistics, predicate
 pushdown — the right 100 TB format), with the CSV conventions preserved in
 `sources/csv.py` for ingestion parity.
+
+Session cache contract (`SESSION_CACHE`):
+
+- **Key**: the Spark application id plus a caller key (`("load", path)`,
+  `("query", name, sf_dir)`, `("shingle_index", sf_dir)`, ...). Entries of
+  any other application (a stopped session) are dropped on the next lookup.
+- **Fingerprint**: every entry also holds (path, size, mtime_ns) of every
+  file under each input it was built from — its own inputs and, through
+  nested lookups, those of every entry its build used. A lookup re-stats
+  those files and rebuilds when anything changed, so an input rewritten in
+  the same session is never served stale. An input the local file system
+  cannot see is never cached.
+- **Bound**: at most `SessionCache.MAX_ENTRIES` entries, least recently used
+  evicted first; an evicted or stale persisted frame is unpersisted.
+- **Users**: `load` (the listing and parquet schema-inference job are
+  saved; the scan runs on every execution), the registry's prepared plans
+  for queries tagged pure (re-executed through a fresh QueryExecution on
+  each call, never reused), the dedup shingle index / hot-shingle set and
+  the fitted IVF / coarse / PQ models.
+- **Never cached**: query results, `.cache()` of a query's output, and
+  per-request answers.
 """
 
 from __future__ import annotations
+
+import os
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,8 +58,142 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+def _file_stats(path: str) -> tuple | None:
+    """(file, size, mtime_ns) of every file under ``path`` (the file itself
+    when it is one); None when the local file system cannot see it."""
+    if os.path.isdir(path):
+        files = sorted(os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs)
+    elif os.path.exists(path):
+        files = [path]
+    else:
+        return None
+    return tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files)
+
+
+def _merge(into: dict, fingerprint: dict) -> None:
+    """Add ``fingerprint`` to ``into``; a path seen with two different
+    stats (rewritten mid-build) becomes None, which never matches."""
+    for path, stats in fingerprint.items():
+        if path in into and into[path] != stats:
+            stats = None
+        into[path] = stats
+
+
+@dataclass
+class _Entry:
+    value: object
+    fingerprint: dict  # input path → _file_stats at build time
+    persisted: bool  # the build persisted the frame; unpersist on drop
+
+
+class SessionCache:
+    """Input-fingerprinted LRU memo of values a session derives from its
+    input files (see the module docstring for the contract)."""
+
+    #: Live entries across every user. One input set needs ~30: 10 table
+    #: loads, one plan per pure query, 3 model kinds and 2 shingle frames;
+    #: the test suite interleaves three or four sets, and evicting a model
+    #: or index makes the next probe refit it.
+    MAX_ENTRIES = 128
+
+    def __init__(self) -> None:
+        self._entries: OrderedDict[tuple, _Entry] = OrderedDict()
+        self._lock = threading.Lock()
+        # per thread: one fingerprint dict per build in progress
+        self._building = threading.local()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def __contains__(self, key: tuple) -> bool:
+        return key in self._entries
+
+    def get(
+        self,
+        spark: SparkSession,
+        key: tuple,
+        build: Callable[[], object],
+        inputs: tuple[str, ...] = (),
+    ):
+        """``build()``'s value for ``key``, built once while the fingerprint
+        of ``inputs`` and of the entries ``build`` looks up still matches.
+        A build may look up other entries (nested builds)."""
+        app = spark.sparkContext.applicationId
+        full = (app,) + key
+        with self._lock:
+            for k in [k for k in self._entries if k[0] != app]:
+                del self._entries[k]  # stopped session: nothing to unpersist
+            entry = self._entries.get(full)
+        if entry is not None:
+            changed = {p for p, s in entry.fingerprint.items() if _file_stats(p) != s}
+            if changed:
+                # Spark matches cached plans by path, not by file contents:
+                # every persisted frame over a changed path goes before
+                # anything is rebuilt, or the rebuild would read its data.
+                self._drop(lambda e: not changed.isdisjoint(e.fingerprint))
+                entry = None
+        if entry is None:
+            entry = self._build(build, inputs)
+            if None not in entry.fingerprint.values():
+                with self._lock:
+                    evicted = [self._entries.pop(full)] if full in self._entries else []
+                    self._entries[full] = entry
+                    while len(self._entries) > self.MAX_ENTRIES:
+                        evicted.append(self._entries.popitem(last=False)[1])
+                _unpersist(evicted)
+        else:
+            with self._lock:
+                if full in self._entries:
+                    self._entries.move_to_end(full)
+        for fingerprint in self._stack():
+            _merge(fingerprint, entry.fingerprint)
+        return entry.value
+
+    def clear(self) -> None:
+        """Drop every entry, unpersisting persisted frames (call with the
+        owning session still running)."""
+        self._drop(lambda e: True)
+
+    def _drop(self, doomed: Callable[[_Entry], bool]) -> None:
+        with self._lock:
+            keys = [k for k, e in self._entries.items() if doomed(e)]
+            dropped = [self._entries.pop(k) for k in keys]
+        _unpersist(dropped)
+
+    def _stack(self) -> list[dict]:
+        return self._building.__dict__.setdefault("stack", [])
+
+    def _build(self, build: Callable[[], object], inputs: tuple[str, ...]) -> _Entry:
+        # inputs are stat'ed before the build reads them, so a rewrite
+        # during the build shows as a change on the next lookup
+        fingerprint = {p: _file_stats(p) for p in inputs}
+        stack = self._stack()
+        stack.append(fingerprint)
+        try:
+            value = build()
+        finally:
+            stack.pop()
+        return _Entry(value, fingerprint, bool(getattr(value, "is_cached", False)))
+
+
+def _unpersist(entries: list[_Entry]) -> None:
+    # Non-blocking: lineage recomputes if a straggler still holds the old
+    # frame; blocks drain in the background.
+    for e in entries:
+        if e.persisted:
+            e.value.unpersist(blocking=False)
+
+
+SESSION_CACHE = SessionCache()
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame.
+    """Load one testdata table as a DataFrame, memoised in `SESSION_CACHE`
+    while the table's files are unchanged (the runtime conf is re-applied
+    on every call, hit or miss). Each call gets its own DataFrame over the
+    held plan: a Dataset fixes its physical plan on first use, so handing
+    every caller the same one would leak one caller's ``.cache()`` (and
+    later ``unpersist()``) into everyone's execution.
 
     `events.ts` has been generated differently across driver rounds: parquet
     TIMESTAMP(NANOS) (→ bigint under `spark.sql.legacy.parquet.nanosAsLong`,
@@ -43,10 +205,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     instant inputs.
     """
     ensure_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+    path = f"{sf_dir}/{name}.parquet"
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        return df
+
+    return SESSION_CACHE.get(spark, ("load", path), read, (path,)).select("*")
 
 
 def epoch_us(col) -> F.Column:

@@ -232,7 +232,7 @@ def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tf JOIN df ON tf.token = df.token CROSS JOIN n
     WHERE tf.doc_id % 10 = 0
     """,
-    tags=("text", "headline"),
+    tags=("text", "headline", "pure"),
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF via explode + two aggregations + broadcast joins (op #48).

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import SESSION_CACHE, load
 from recommendation_system_big_data_spark.functions.vectors import (
     as_double_array,
     dot,
@@ -167,55 +167,18 @@ def _exploded_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Session-scoped shingle index: (applicationId, sf_dir) → persisted
-#: (doc_id, lang, sh) frame. Both near-dup queries consume the corpus
-#: index several times (self-join sides, signature + verify); a production
-#: dedup service shingles its corpus once and serves many probes from the
-#: materialized index — this cache is that, sized at ~tokens-per-corpus
-#: strings (tens of MB at sf0.1; partitioned across executors at scale).
-_SHINGLE_INDEX: dict[tuple, DataFrame] = {}
-
-#: Bound on live cache entries (ADVICE r1): one index per (app, sf_dir) pair
-#: is the working set; anything older is unpersisted so cached blocks and
-#: stale DataFrame references can't accumulate across scale factors or
-#: sessions in a long-lived process.
-_SHINGLE_INDEX_MAX = 2
-
-#: Session-scoped hot-shingle sets, cached separately from the main index
-#: (they are a few rows each; the persist means the df-count aggregate runs
-#: once per corpus, not once per query invocation).
-_HOT_SHINGLES: dict[tuple, DataFrame] = {}
-
-
-def _lru_cached_df(cache: dict, spark: SparkSession, key_tail: tuple, build, max_entries: int) -> DataFrame:
-    """Session-scoped LRU cache of persisted DataFrames. Eviction is
-    least-recently-USED (re-insert on hit — ADVICE r2: FIFO could evict the
-    hot entry while a colder, older one survives); entries from stopped
-    sessions are dropped without unpersist (their contexts are gone)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + key_tail
-    for k in [k for k in cache if k[0] != app_id]:
-        cache.pop(k)
-    df = cache.get(key)
-    if df is None:
-        while len(cache) >= max_entries:
-            # Non-blocking: lineage recomputes if a straggler still holds
-            # the old frame; blocks drain in the background.
-            cache.pop(next(iter(cache))).unpersist(blocking=False)
-        df = build().persist()
-    else:
-        cache.pop(key)
-    cache[key] = df
-    return df
-
-
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lru_cached_df(
-        _SHINGLE_INDEX,
+    """The corpus's persisted (doc_id, lang, sh) shingle index, built once
+    per session and corpus (``catalog.SESSION_CACHE``). Both near-dup
+    queries consume the corpus index several times (self-join sides,
+    signature + verify); a production dedup service shingles its corpus
+    once and serves many probes from the materialized index — this is that,
+    sized at ~tokens-per-corpus strings (tens of MB at sf0.1; partitioned
+    across executors at scale)."""
+    return SESSION_CACHE.get(
         spark,
-        (sf_dir,),
-        lambda: _shingled(load(spark, sf_dir, "documents")),
-        _SHINGLE_INDEX_MAX,
+        ("shingle_index", sf_dir),
+        lambda: _shingled(load(spark, sf_dir, "documents")).persist(),
     )
 
 
@@ -223,12 +186,10 @@ def hot_shingle_set(spark: SparkSession, sf_dir: str, df_cap: int = SHINGLE_DF_C
     """The corpus's boilerplate shingles (df > cap), persisted per session —
     a production index materializes this next to the postings, so every
     dedup probe pays the anti-join (against a few rows), not the count."""
-    return _lru_cached_df(
-        _HOT_SHINGLES,
+    return SESSION_CACHE.get(
         spark,
-        (sf_dir, df_cap),
-        lambda: _hot_shingles(_exploded_index(spark, sf_dir), df_cap),
-        _SHINGLE_INDEX_MAX,
+        ("hot_shingles", sf_dir, df_cap),
+        lambda: _hot_shingles(_exploded_index(spark, sf_dir), df_cap).persist(),
     )
 
 

@@ -248,7 +248,7 @@ def agg_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summarize(load(spark, sf_dir, "lineitem"), _SUMMARY_COLS, exact=True)
 
 
-@register("agg_summary_approx", oracle=None, tags=("profile", "agg"))
+@register("agg_summary_approx", oracle=None, tags=("profile", "agg", "pure"))
 def agg_summary_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production/scale path of op #22: one fused keyless aggregate with
     approx_percentile (⊘ rows-only — GK sketches are engine-specific;

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import SESSION_CACHE, load
 from recommendation_system_big_data_spark.functions.vectors import (
     as_double_array,
     dot,
@@ -51,7 +51,7 @@ SELECT query_id, neighbor_id, ROUND(c, 6) AS cos_sim, rn FROM (
 """
 
 
-@register("sim_topk_bruteforce", oracle=_SIM_ORACLE, tags=("similarity", "headline"))
+@register("sim_topk_bruteforce", oracle=_SIM_ORACLE, tags=("similarity", "headline", "pure"))
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: broadcast queries × streamed candidates → window
     top-k per query. The candidate table is scanned once and never shuffled
@@ -196,40 +196,15 @@ def kmeans_centroids(
     return cent
 
 
-#: Session-scoped fitted ANN models: (applicationId, sf_dir, kind) →
-#: driver-side model (centroid rows / PQ codebook lists). The engine's
-#: three IVF consumers (sim_topk_ivf, sim_topk_ivfpq,
-#: dedup_semantic_semdedup) and three PQ consumers (sim_topk_pq_adc,
-#: sim_topk_ivfpq, embedding_pq_compress) all fit the SAME model over the
-#: same corpus — a production ANN service trains the quantizer once and
-#: serves every probe from it, exactly like the shingle index caches the
-#: dedup corpus (operators/dedup.py::shingle_index; cold/warm contract
-#: documented in BASELINE.md). Models are k×d / M·K·d_sub driver values
-#: (a few hundred KB), so eviction needs no unpersist; entries from
-#: stopped sessions drop on the next call.
-#: Cap = model kinds (ivf_centroids, coarse_centroids, pq_codebooks) ×
-#: corpora a session realistically interleaves (the test suite alternates
-#: sf0.001/sf0.01, bench adds sf0.1) — 3×3 rounded up. A cap of 4 caused
-#: evict-and-refit thrash on every sf_dir interleave.
-_FITTED_MODELS: dict[tuple, object] = {}
-_FITTED_MODELS_MAX = 12
-
-
-def _session_model(spark: SparkSession, key_tail: tuple, build):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + key_tail
-    for k in [k for k in _FITTED_MODELS if k[0] != app_id]:
-        _FITTED_MODELS.pop(k)
-    if key in _FITTED_MODELS:
-        # true LRU: a hit moves to the back so interleaved corpora don't
-        # evict each other's hot models
-        _FITTED_MODELS[key] = _FITTED_MODELS.pop(key)
-        return _FITTED_MODELS[key]
-    model = build()  # may recursively insert (hier IVF builds coarse first)
-    _FITTED_MODELS[key] = model
-    while len(_FITTED_MODELS) > _FITTED_MODELS_MAX:
-        _FITTED_MODELS.pop(next(iter(_FITTED_MODELS)))
-    return model
+# The fitted ANN models live in ``catalog.SESSION_CACHE``, keyed on
+# (kind, sf_dir) and invalidated when the embeddings are rewritten. The
+# engine's three IVF consumers (sim_topk_ivf, sim_topk_ivfpq,
+# dedup_semantic_semdedup) and three PQ consumers (sim_topk_pq_adc,
+# sim_topk_ivfpq, embedding_pq_compress) all fit the SAME model over the
+# same corpus — a production ANN service trains the quantizer once and
+# serves every probe from it, exactly like the shingle index caches the
+# dedup corpus (operators/dedup.py::shingle_index). Models are k×d /
+# M·K·d_sub driver values (a few hundred KB).
 
 
 def corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,9 +217,9 @@ def corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's fitted IVF coarse quantizer, trained once per session
     (deterministic — cached and fresh fits are identical rows)."""
-    rows = _session_model(
+    rows = SESSION_CACHE.get(
         spark,
-        (sf_dir, "ivf_centroids"),
+        ("ivf_centroids", sf_dir),
         lambda: kmeans_centroids(corpus_vectors(spark, sf_dir)).collect(),
     )
     return spark.createDataFrame(
@@ -254,9 +229,9 @@ def corpus_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """The corpus's fitted PQ codebooks, trained once per session."""
-    return _session_model(
+    return SESSION_CACHE.get(
         spark,
-        (sf_dir, "pq_codebooks"),
+        ("pq_codebooks", sf_dir),
         lambda: _pq_fit_codebooks(corpus_vectors(spark, sf_dir)),
     )
 
@@ -327,9 +302,9 @@ def corpus_coarse_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus) like every fitted model. Input is the k×d fine
     model — driver-sized — so this fit costs k·√k dot products, noise at
     any scale."""
-    rows = _session_model(
+    rows = SESSION_CACHE.get(
         spark,
-        (sf_dir, "coarse_centroids"),
+        ("coarse_centroids", sf_dir),
         lambda: kmeans_centroids(
             corpus_centroids(spark, sf_dir).select(
                 F.col("centroid_id").alias("vec_id"), F.col("cv").alias("v")

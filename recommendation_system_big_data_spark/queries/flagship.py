@@ -64,7 +64,7 @@ WHERE rnk <= 5
 """
 
 
-@register("flagship_top_customers", oracle=FLAGSHIP_ORACLE, tags=("pipeline", "headline"))
+@register("flagship_top_customers", oracle=FLAGSHIP_ORACLE, tags=("pipeline", "headline", "pure"))
 def flagship_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """scan → agg → join dim → window top-k (model-als.py:141-158 shape).
 

@@ -62,7 +62,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("pipeline", "headline"))
+@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("pipeline", "headline", "pure"))
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: one wide fact scan, 6-group aggregate, no joins.
 
@@ -110,7 +110,7 @@ LIMIT 10
 """
 
 
-@register("q3_shipping_priority", oracle=Q3_ORACLE, tags=("pipeline", "headline"))
+@register("q3_shipping_priority", oracle=Q3_ORACLE, tags=("pipeline", "headline", "pure"))
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → two joins → agg → top-10.
 
@@ -201,7 +201,7 @@ ORDER BY revenue DESC, n_name ASC
 """
 
 
-@register("q5_local_supplier_volume", oracle=Q5_ORACLE, tags=("pipeline", "headline"))
+@register("q5_local_supplier_volume", oracle=Q5_ORACLE, tags=("pipeline", "headline", "pure"))
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-table star join, all dimensions broadcast.
 
@@ -268,7 +268,7 @@ LIMIT 100
 """
 
 
-@register("q18_large_volume_customers", oracle=Q18_ORACLE, tags=("pipeline",))
+@register("q18_large_volume_customers", oracle=Q18_ORACLE, tags=("pipeline", "pure"))
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN-subquery over a grouped HAVING, expressed as a
     semi join against the aggregated key set.

@@ -3,22 +3,37 @@
 Every implemented operator from SURVEY.md §2 registers a named query:
 a callable ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible) a
 DuckDB oracle SQL string. ``__spark_entry__.py`` exposes the registry to the
-correctness driver; ``bench.py`` times the headline subset.
+correctness driver; ``perfbench/`` times a mix of them.
 
 Determinism contract (SURVEY.md §7.3): every registered query uses explicit
 tiebreakers, fixed seeds, and ROUND(x, 6) on float outputs so the driver's
 order-insensitive value-hash comparison is stable. Queries whose semantics
 are not SQL-expressible (ALS, LSH, true streaming runs, sampling) register
 with ``oracle=None`` → the driver records a weaker rows-only check.
+
+Prepared plans: a query tagged ``pure`` (its DataFrame depends only on
+``sf_dir`` and on the tables it reads through ``catalog.load``) is built
+once per (application, query, sf_dir) and held in ``catalog.SESSION_CACHE``.
+Every lookup (``get_query``, ``registry``, ``all_queries``) returns a
+callable that re-applies the runtime conf, checks the fingerprints of the
+plan's input files (rebuilding when one changed) and returns the held plan
+through a fresh QueryExecution — the query still plans and runs all its
+jobs on every call; only the Python build is saved. Plans over an RDD
+(``LogicalRDD``/``ExternalRDD``, e.g. a ``localCheckpoint``) are refused:
+re-running one would reuse its materialised data.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from recommendation_system_big_data_spark.catalog import SESSION_CACHE
+from recommendation_system_big_data_spark.session import ensure_runtime_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -183,13 +198,48 @@ _DRIVER_WINDOW_ALIASES = (
 #:    (rows-only names stay excluded, oracle=None — r12 #3 rule).
 
 
+#: Tag marking a query whose plan the registry may prepare (see above).
+PURE = "pure"
+
+#: Analysed-plan leaves that hold materialised data a re-run would reuse.
+_RDD_LEAVES = ("LogicalRDD", "ExternalRDD")
+
+
+def preparable(df: DataFrame) -> bool:
+    """Whether ``df``'s plan may be held and re-executed: it reads no RDD."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return not any(leaf in plan for leaf in _RDD_LEAVES)
+
+
+def _prepared(name: str, fn: QueryFn) -> QueryFn:
+    """``fn`` with its plan built once per (application, query, sf_dir)."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+        df = fn(spark, sf_dir)
+        return df if preparable(df) else None
+
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ensure_runtime_conf(spark)
+        held = SESSION_CACHE.get(spark, ("query", name, sf_dir), lambda: build(spark, sf_dir))
+        # select("*") gives the held plan a fresh QueryExecution, so every
+        # call plans and runs all its jobs; the held frame itself is never
+        # returned, never executed (its shuffle files would be reused).
+        return fn(spark, sf_dir) if held is None else held.select("*")
+
+    return call
+
+
 def register(name: str, *, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
+    The decorated function stays the raw builder; the registry serves a
+    prepared plan for queries tagged ``PURE``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QueryDef(name=name, fn=fn, oracle=oracle, tags=tuple(tags))
+        served = _prepared(name, fn) if PURE in tags else fn
+        _REGISTRY[name] = QueryDef(name=name, fn=served, oracle=oracle, tags=tuple(tags))
         return fn
 
     return deco

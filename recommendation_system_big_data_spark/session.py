@@ -98,10 +98,13 @@ def get_spark(
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to a session we may not have built.
 
-    The correctness driver constructs its own SparkSession; every public
-    query entry point calls this (via catalog.load) so behavior does not
-    depend on who built the session. All keys in RUNTIME_CONF are
-    runtime-settable SQL confs.
+    The correctness driver constructs its own SparkSession, and a caller
+    may flip a conf between queries. Every table read calls this
+    (``catalog.load``, hit or miss in the session cache), and so does every
+    call of a prepared registry plan (``registry._prepared``), which reads
+    no table when its plan is already held — so behavior does not depend on
+    who built the session or what it changed since. All keys in
+    RUNTIME_CONF are runtime-settable SQL confs.
     """
     for k, v in RUNTIME_CONF.items():
         try:

@@ -150,22 +150,6 @@ def test_simhash_pairs_have_small_hamming(spark, sf_dir):
     assert all(r["doc_a"] < r["doc_b"] for r in rows)
 
 
-def test_shingle_index_bounded_eviction(spark, sf_dir):
-    """ADVICE r1: the session shingle cache must evict (and unpersist) old
-    entries instead of accumulating one persisted frame per sf_dir."""
-    from recommendation_system_big_data_spark.operators import dedup as D
-
-    D._SHINGLE_INDEX.clear()
-    a = D.shingle_index(spark, "/root/testdata/sf0.001")
-    assert a is D.shingle_index(spark, "/root/testdata/sf0.001")  # cache hit
-    D.shingle_index(spark, "/root/testdata/sf0.01")
-    D.shingle_index(spark, "/root/testdata/sf0.1")  # 3rd entry → evict oldest
-    assert len(D._SHINGLE_INDEX) <= D._SHINGLE_INDEX_MAX
-    # the evicted (oldest) frame must be unpersisted
-    assert a.storageLevel.useMemory is False
-    D._SHINGLE_INDEX.clear()
-
-
 def test_df_cap_is_noop_on_testdata(spark, sf_dir):
     """VERDICT r2 #5: the SHINGLE_DF_CAP boilerplate anti-join must not
     change results on the test corpus (max shingle df 25 at sf0.1, far

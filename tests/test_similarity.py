@@ -366,105 +366,6 @@ def test_pq_compress_invariants(spark, sf_dir):
     assert tuple(row) == tuple(again)
 
 
-def test_session_model_cache_matches_fresh_fit(spark, sf_dir):
-    """The session-scoped ANN model cache must be a pure memo: a cached
-    corpus_centroids / corpus_pq_codebooks hit is bit-identical to a
-    fresh fit of the same corpus (the determinism that makes the
-    index-once/probe-many posture safe), and repeated calls hit the
-    cache (same driver-side object)."""
-    from recommendation_system_big_data_spark.operators.similarity import (
-        _FITTED_MODELS,
-        _pq_fit_codebooks,
-        corpus_centroids,
-        corpus_pq_codebooks,
-        corpus_vectors,
-        kmeans_centroids,
-    )
-
-    cached = sorted(map(str, corpus_centroids(spark, sf_dir).collect()))
-    fresh = sorted(
-        map(str, kmeans_centroids(corpus_vectors(spark, sf_dir)).collect())
-    )
-    assert cached == fresh and len(cached) > 1
-
-    cb_cached = corpus_pq_codebooks(spark, sf_dir)
-    assert cb_cached == _pq_fit_codebooks(corpus_vectors(spark, sf_dir))
-    # second call returns the memoized object, not a refit
-    assert corpus_pq_codebooks(spark, sf_dir) is cb_cached
-    app_id = spark.sparkContext.applicationId
-    assert (app_id, sf_dir, "ivf_centroids") in _FITTED_MODELS
-
-
-def test_session_model_cache_eviction_bounded(spark, sf_dir):
-    """The model cache must stay bounded (LRU-ish eviction at
-    _FITTED_MODELS_MAX) and rebuild evicted entries rather than serving
-    stale objects from unbounded growth."""
-    from recommendation_system_big_data_spark.operators import similarity as S
-
-    builds = {"n": 0}
-
-    def build():
-        builds["n"] += 1
-        return builds["n"]
-
-    S._FITTED_MODELS.clear()
-    for i in range(S._FITTED_MODELS_MAX + 2):
-        S._session_model(spark, (f"dir{i}", "kind"), build)
-    assert len(S._FITTED_MODELS) <= S._FITTED_MODELS_MAX
-    assert builds["n"] == S._FITTED_MODELS_MAX + 2
-    # the oldest entry was evicted; re-requesting it rebuilds
-    before = builds["n"]
-    S._session_model(spark, ("dir0", "kind"), build)
-    assert builds["n"] == before + 1
-    S._FITTED_MODELS.clear()
-
-
-def test_session_model_cache_true_lru(spark, sf_dir):
-    """A cache HIT must refresh recency (true LRU): interleaving two
-    corpora's three model kinds — the test suite's actual access
-    pattern — must never evict-and-refit a hot entry, and a build that
-    itself inserts (the hierarchical IVF builds the coarse model inside
-    the fine model's build()) must not push the cache past its cap."""
-    from recommendation_system_big_data_spark.operators import similarity as S
-
-    builds = {"n": 0}
-
-    def build():
-        builds["n"] += 1
-        return builds["n"]
-
-    S._FITTED_MODELS.clear()
-    kinds = ("ivf_centroids", "coarse_centroids", "pq_codebooks")
-    for _ in range(3):  # three interleaved passes over 2 corpora × 3 kinds
-        for d in ("dirA", "dirB"):
-            for k in kinds:
-                S._session_model(spark, (d, k), build)
-    assert builds["n"] == 6, "interleaved hot set must fit with zero refits"
-
-    # nested insert during build() must respect the cap
-    def nested_build():
-        S._session_model(spark, ("dirC", "coarse"), build)
-        builds["n"] += 1
-        return builds["n"]
-
-    S._session_model(spark, ("dirC", "fine"), nested_build)
-    assert len(S._FITTED_MODELS) <= S._FITTED_MODELS_MAX
-    # LRU order: touch the oldest entry, fill to the cap, and the
-    # refreshed entry must survive while a non-touched one is evicted
-    S._session_model(spark, ("dirA", "ivf_centroids"), build)  # hit
-    n_before = builds["n"]
-    i = 0
-    while len(S._FITTED_MODELS) < S._FITTED_MODELS_MAX:
-        S._session_model(spark, (f"fill{i}", "k"), build)
-        i += 1
-    S._session_model(spark, ("overflow", "k"), build)  # forces one eviction
-    app_id = spark.sparkContext.applicationId
-    assert (app_id, "dirA", "ivf_centroids") in S._FITTED_MODELS
-    S._session_model(spark, ("dirA", "ivf_centroids"), build)
-    assert builds["n"] == n_before + (i + 1), "refreshed entry was refit"
-    S._FITTED_MODELS.clear()
-
-
 def test_ivf_hier_recall_agreement_determinism(spark, sf_dir):
     """The two-level quantizer must (a) keep recall@10 in the same band as
     single-level IVF (coarse routing adds only boundary loss), (b) route

@@ -141,13 +141,9 @@ def clear_session_caches() -> None:
     """Session-persisted index caches are keyed per sf_dir, but clear them
     anyway so no fixture reads another's materialization (the r9
     layout-sweep lesson)."""
-    from recommendation_system_big_data_spark.operators import dedup, similarity
+    from recommendation_system_big_data_spark.catalog import SESSION_CACHE
 
-    for attr in ("_SHINGLE_INDEX", "_HOT_SHINGLES"):
-        if hasattr(dedup, attr) and isinstance(getattr(dedup, attr), dict):
-            getattr(dedup, attr).clear()
-    if hasattr(similarity, "_FITTED_MODELS"):
-        similarity._FITTED_MODELS.clear()
+    SESSION_CACHE.clear()
 
 
 def main() -> None:

@@ -81,16 +81,9 @@ def _clear_session_caches():
     cached-index consumer compares A against A — a vacuous zero-diff
     (found by round-9 review; the first sweep's dedup-family evidence was
     overstated exactly this way)."""
-    from recommendation_system_big_data_spark.operators import dedup as _dedup
-    from recommendation_system_big_data_spark.operators import (
-        similarity as _similarity,
-    )
+    from recommendation_system_big_data_spark.catalog import SESSION_CACHE
 
-    for cache in (_dedup._SHINGLE_INDEX, _dedup._HOT_SHINGLES):
-        for df in cache.values():
-            df.unpersist(blocking=False)
-        cache.clear()
-    _similarity._FITTED_MODELS.clear()
+    SESSION_CACHE.clear()
 
 
 def _norm_exact(v):
