@@ -11,19 +11,27 @@ Session cache contract (`SESSION_CACHE`):
 - **Key**: the Spark application id plus a caller key (`("load", path)`,
   `("query", name, sf_dir)`, `("shingle_index", sf_dir)`, ...). Entries of
   any other application (a stopped session) are dropped on the next lookup.
+  `SessionCache.get_for` keys a value on DataFrames instead: their analysed
+  plans, hashed by ``semanticHash`` and confirmed by ``sameSemantics``.
 - **Fingerprint**: every entry also holds (path, size, mtime_ns) of every
   file under each input it was built from — its own inputs and, through
   nested lookups, those of every entry its build used. A lookup re-stats
   those files and rebuilds when anything changed, so an input rewritten in
-  the same session is never served stale. An input the local file system
-  cannot see is never cached.
+  the same session is never served stale. Inputs are local paths or
+  ``file:`` URIs (the form Spark reports); an input the local file system
+  cannot see, or one under any other scheme, is never cached.
 - **Bound**: at most `SessionCache.MAX_ENTRIES` entries, least recently used
   evicted first; an evicted or stale persisted frame is unpersisted.
 - **Users**: `load` (the listing and parquet schema-inference job are
   saved; the scan runs on every execution), the registry's prepared plans
   for queries tagged pure (re-executed through a fresh QueryExecution on
-  each call, never reused), the dedup shingle index / hot-shingle set and
-  the fitted IVF / coarse / PQ models.
+  each call, never reused), the dedup shingle index / hot-shingle set, the
+  fitted IVF / coarse / PQ models, and, keyed on frames, the recommender's
+  fitted ALS models and per-item enrichment table (`operators/recommend.py`).
+- **Held plans**: a plan is held only when every leaf of it reads files or
+  no data at all (`frame_inputs`); a plan over an RDD (``localCheckpoint``,
+  ``createDataFrame``) would reuse its materialised data, and a source whose
+  files are unknown could go stale, so both run unheld.
 - **Never cached**: query results, `.cache()` of a query's output, and
   per-request answers.
 """
@@ -35,6 +43,7 @@ import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,9 +67,22 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+def _local_path(path: str) -> str | None:
+    """``path`` on the local file system: itself, or the path of a ``file:``
+    URI (the form ``DataFrame.inputFiles()`` returns); None for any other
+    scheme."""
+    url = urlparse(path)
+    if not url.scheme:
+        return path
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        return unquote(url.path)
+    return None
+
+
 def _file_stats(path: str) -> tuple | None:
-    """(file, size, mtime_ns) of every file under ``path`` (the file itself
-    when it is one); None when the local file system cannot see it."""
+    """(file, size, mtime_ns) of every file under the local ``path`` (the
+    file itself when it is one); None when the local file system cannot see
+    it."""
     if os.path.isdir(path):
         files = sorted(os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs)
     elif os.path.exists(path):
@@ -77,6 +99,60 @@ def _merge(into: dict, fingerprint: dict) -> None:
         if path in into and into[path] != stats:
             stats = None
         into[path] = stats
+
+
+#: Analysed-plan leaves that read no data (their rows sit in the plan).
+_DATALESS_LEAVES = ("LocalRelation", "Range", "OneRowRelation")
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def frame_inputs(df: DataFrame) -> tuple[str, ...] | None:
+    """The root paths of every file source ``df``'s analysed plan reads
+    (subqueries included), as Spark reports them; None when the plan may
+    not be held: a leaf reads an RDD (re-running a held plan would reuse its
+    materialised data) or a source whose files are unknown. The analysed
+    plan is read, not ``inputFiles()``, which reports nothing for a
+    ``.cache()``d frame; a root path covers files added under it later."""
+    plan = df._jdf.queryExecution().analyzed()
+    roots: set[str] = set()
+    for p in [plan] + _seq(plan.subqueriesAll()):
+        for leaf in _seq(p.collectLeaves()):
+            name = leaf.nodeName()
+            if name in _DATALESS_LEAVES:
+                continue
+            if name != "LogicalRelation":
+                return None
+            relation = leaf.relation()
+            if relation.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            roots.update(path.toString() for path in _seq(relation.location().rootPaths()))
+    return tuple(sorted(roots))
+
+
+def preparable(df: DataFrame) -> bool:
+    """Whether ``df``'s plan may be held and re-executed (`frame_inputs`)."""
+    return frame_inputs(df) is not None
+
+
+class _Plans:
+    """Cache-key part naming DataFrames by their analysed plans: hashed by
+    ``semanticHash``, equal when every plan has the same semantics, so a
+    hash collision can never hand one plan's value to another."""
+
+    def __init__(self, frames: tuple[DataFrame, ...]) -> None:
+        self.frames = frames
+        self._hash = hash(tuple(df.semanticHash() for df in frames))
+
+    def __hash__(self) -> int:
+        return self._hash
+
+    def __eq__(self, other: object) -> bool:
+        return isinstance(other, _Plans) and all(
+            a.sameSemantics(b) for a, b in zip(self.frames, other.frames)
+        )
 
 
 @dataclass
@@ -149,6 +225,21 @@ class SessionCache:
             _merge(fingerprint, entry.fingerprint)
         return entry.value
 
+    def get_for(self, kind: str, frames: tuple[DataFrame, ...], build: Callable[[], object]):
+        """``build()``'s value for the analysed plans of ``frames``, held
+        like ``get``'s with the files those plans read as its inputs; None
+        when a frame's plan may not be held (`frame_inputs`) or the local
+        file system cannot see its files, and the caller then runs its
+        program unheld (so a build that persists never leaks an untracked
+        frame)."""
+        inputs = [frame_inputs(df) for df in frames]
+        if None in inputs:
+            return None
+        files = tuple(sorted(set().union(*inputs)))
+        if any((local := _local_path(f)) is None or _file_stats(local) is None for f in files):
+            return None
+        return self.get(frames[0].sparkSession, (kind, _Plans(frames)), build, files)
+
     def clear(self) -> None:
         """Drop every entry, unpersisting persisted frames (call with the
         owning session still running)."""
@@ -166,7 +257,10 @@ class SessionCache:
     def _build(self, build: Callable[[], object], inputs: tuple[str, ...]) -> _Entry:
         # inputs are stat'ed before the build reads them, so a rewrite
         # during the build shows as a change on the next lookup
-        fingerprint = {p: _file_stats(p) for p in inputs}
+        fingerprint = {}
+        for p in inputs:
+            local = _local_path(p)
+            fingerprint[local or p] = None if local is None else _file_stats(local)
         stack = self._stack()
         stack.append(fingerprint)
         try:

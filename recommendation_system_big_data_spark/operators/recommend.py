@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import SESSION_CACHE, load
 from recommendation_system_big_data_spark.registry import register
 
 #: Reference hyperparameters, model-als.py:111-120.
@@ -37,6 +37,15 @@ def ratings_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def train_als(ratings: DataFrame):
+    """ALS with the reference hyperparameters fitted on ``ratings``, once
+    per ratings plan and input-file fingerprint (`catalog.SESSION_CACHE`):
+    the seeded fit is deterministic, so a held model equals a fresh one. A
+    plan the cache may not hold (over an RDD) is fitted on every call."""
+    held = SESSION_CACHE.get_for("als_fit", (ratings,), lambda: _fit_als(ratings))
+    return _fit_als(ratings) if held is None else held
+
+
+def _fit_als(ratings: DataFrame):
     from pyspark.ml.recommendation import ALS
 
     als = ALS(
@@ -69,6 +78,31 @@ def als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def item_table(dim: DataFrame, ratings: DataFrame) -> DataFrame:
+    """The catalog LEFT JOIN the per-item average rating, one row per
+    catalog row: ``ID, Name, English name, Type, avg_rating`` (NULL for an
+    item nobody rated). Persisted and held in `catalog.SESSION_CACHE`, keyed
+    on the analysed plans of ``dim`` and ``ratings`` and fingerprinted by the
+    files they read, so the aggregate over the ratings runs once per input
+    set; a rewritten input rebuilds it. Frames the cache may not hold (over
+    an RDD, e.g. ``createDataFrame``) get the same program unpersisted. The
+    held frame is shared: callers must not unpersist it.
+
+    The per-item average join carries no broadcast hint: its size is the
+    item-catalog cardinality, which AQE can see at runtime — an
+    unconditional hint would force the broadcast even if the catalog
+    outgrew executor memory (VERDICT r1 #2)."""
+
+    def build() -> DataFrame:
+        avg = ratings.groupBy("anime_id").agg(F.avg("rating").alias("avg_rating"))
+        return dim.join(avg, dim["ID"] == avg["anime_id"], "left").select(
+            dim["ID"], dim["Name"], dim["English name"], dim["Type"], avg["avg_rating"]
+        )
+
+    held = SESSION_CACHE.get_for("item_table", (dim, ratings), lambda: build().persist())
+    return build() if held is None else held
+
+
 def enrich_and_rank(
     recs: DataFrame,
     dim: DataFrame,
@@ -77,33 +111,26 @@ def enrich_and_rank(
     top_n: int = 5,
 ) -> DataFrame:
     """The reference's enrichment query (model-als.py:141-158) as a reusable
-    relational program: recommendations LEFT JOIN dimension on
-    anime_id == ID, project the 4 dim columns + score, LEFT JOIN the
-    per-item average rating, drop the duplicate key, filter one media type,
-    sort by avg_rating desc, keep top_n. Produces the golden-output shape
-    `ID, Name, English name, avg_rating` (recommendations_series.csv:1).
+    relational program: recommendations (``anime_id``) LEFT JOIN the item
+    table (`item_table`: catalog + per-item average rating) on
+    anime_id == ID, filter one media type, sort by avg_rating desc, keep
+    top_n. Produces the golden-output shape `ID, Name, English name,
+    avg_rating` (recommendations_series.csv:1).
+
+    Each call runs its own join, filter, sort and limit; only the item
+    table is built once per input set. Edge cases: recommended IDs missing
+    from the catalog are dropped (their Type is NULL); an item nobody rated
+    has a NULL avg_rating and sorts after every rated one; a list with no
+    item of ``type_value`` gives an empty result, not a fallback.
 
     Differences from the reference, by design (SURVEY.md §4):
     - the pandas re-sort round-trip (model-als.py:164-171) is folded into
       the single orderBy (op #29);
-    - ID is an explicit deterministic tiebreaker so ties can't reorder;
-    - the per-item average join carries no broadcast hint: its size is the
-      item-catalog cardinality, which AQE can see at runtime — an
-      unconditional hint would force the broadcast even if the catalog
-      outgrew executor memory (VERDICT r1 #2)."""
-    enriched = recs.join(dim, recs["anime_id"] == dim["ID"], how="left").select(
-        dim["ID"], dim["Name"], dim["English name"], dim["Type"], recs["predicted_rating"]
-    )
-    avg_ratings = (
-        ratings.groupBy("anime_id")
-        .avg("rating")
-        .withColumnRenamed("avg(rating)", "avg_rating")
-    )
+    - ID is an explicit deterministic tiebreaker so ties can't reorder."""
+    items = item_table(dim, ratings)
     return (
-        enriched.join(
-            avg_ratings, enriched["ID"] == avg_ratings["anime_id"], "left"
-        )
-        .drop(avg_ratings["anime_id"])
+        recs.join(items, recs["anime_id"] == items["ID"], "left")
+        .select(*(items[c] for c in items.columns))
         .filter(F.col("Type") == type_value)
         .orderBy(F.col("avg_rating").desc(), F.col("ID").asc())
         .select("ID", "Name", "English name", F.round("avg_rating", 6).alias("avg_rating"))

@@ -18,9 +18,9 @@ Every lookup (``get_query``, ``registry``, ``all_queries``) returns a
 callable that re-applies the runtime conf, checks the fingerprints of the
 plan's input files (rebuilding when one changed) and returns the held plan
 through a fresh QueryExecution — the query still plans and runs all its
-jobs on every call; only the Python build is saved. Plans over an RDD
-(``LogicalRDD``/``ExternalRDD``, e.g. a ``localCheckpoint``) are refused:
-re-running one would reuse its materialised data.
+jobs on every call; only the Python build is saved. Plans the cache may
+not hold (``catalog.preparable``: e.g. over a ``localCheckpoint`` RDD,
+whose materialised data a re-run would reuse) are built on every call.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from recommendation_system_big_data_spark.catalog import SESSION_CACHE
+from recommendation_system_big_data_spark.catalog import SESSION_CACHE, preparable
 from recommendation_system_big_data_spark.session import ensure_runtime_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -200,16 +200,6 @@ _DRIVER_WINDOW_ALIASES = (
 
 #: Tag marking a query whose plan the registry may prepare (see above).
 PURE = "pure"
-
-#: Analysed-plan leaves that hold materialised data a re-run would reuse.
-_RDD_LEAVES = ("LogicalRDD", "ExternalRDD")
-
-
-def preparable(df: DataFrame) -> bool:
-    """Whether ``df``'s plan may be held and re-executed: it reads no RDD."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return not any(leaf in plan for leaf in _RDD_LEAVES)
-
 
 def _prepared(name: str, fn: QueryFn) -> QueryFn:
     """``fn`` with its plan built once per (application, query, sf_dir)."""

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from recommendation_system_big_data_spark.catalog import SESSION_CACHE, SessionCache, load
 from recommendation_system_big_data_spark.functions.vectors import as_double_array
 from recommendation_system_big_data_spark.operators import dedup as D
+from recommendation_system_big_data_spark.operators import recommend as R
 from recommendation_system_big_data_spark.operators import similarity as S
 from recommendation_system_big_data_spark.registry import PURE, get_query, preparable, registry
 
@@ -150,7 +151,8 @@ def test_bm25_is_never_prepared(spark, sf_dir):
     assert PURE not in q.tags
     assert q.fn is text_bm25_retrieval
     assert not preparable(text_bm25_retrieval(spark, sf_dir))
-    assert preparable(get_query("q1_pricing_summary").fn.__wrapped__(spark, sf_dir))
+    for name in PREPARED_MIX:
+        assert preparable(get_query(name).fn.__wrapped__(spark, sf_dir)), name
 
 
 def test_prepared_call_repins_runtime_conf(spark, sf_dir):
@@ -250,3 +252,62 @@ def test_session_model_cache_true_lru(spark, sf_dir):
     SESSION_CACHE.get(spark, ("ivf_centroids", "dirA"), build)
     assert builds["n"] == n_before + (i + 1), "refreshed entry was refit"
     SESSION_CACHE.clear()
+
+
+def test_file_uris_fingerprint_as_local_paths(spark, tmp_path):
+    """A ``file:`` URI (how Spark reports its input files) is fingerprinted
+    as the local path: held, and rebuilt once the file changes. An input
+    under any other scheme is never held."""
+    path = tmp_path / "input.csv"
+    path.write_text("a\n1\n")
+    uris = (path.as_uri(), f"file:{path}", f"file://localhost{path}")
+    builds, build = _counter()
+    for uri in uris:
+        SESSION_CACHE.get(spark, ("uri", uri), build, (uri,))
+        SESSION_CACHE.get(spark, ("uri", uri), build, (uri,))
+    assert builds["n"] == len(uris)
+    path.write_text("a\n1\n2\n")
+    for uri in uris:
+        SESSION_CACHE.get(spark, ("uri", uri), build, (uri,))
+    assert builds["n"] == 2 * len(uris)
+
+    app_id = spark.sparkContext.applicationId
+    for uri in (f"hdfs://namenode:8020{path}", f"s3a://bucket{path}", f"file://otherhost{path}"):
+        before = builds["n"]
+        SESSION_CACHE.get(spark, ("uri", uri), build, (uri,))
+        SESSION_CACHE.get(spark, ("uri", uri), build, (uri,))
+        assert builds["n"] == before + 2
+        assert (app_id, "uri", uri) not in SESSION_CACHE
+
+
+#: Every registry query that fits the reference ALS model.
+ALS_QUERIES = (
+    "als_recommend_topk",
+    "als_recommend_user_subset",
+    "als_predict",
+    "als_rmse",
+    "als_enriched_recs",
+    "als_item_similarity",
+    "als_eval_coverage_novelty",
+)
+
+
+def test_als_fits_once_per_ratings_plan(spark, sf_dir, monkeypatch):
+    """The ALS queries share two fits on one input set — the full ratings
+    and the seeded 80 % split — and a held model gives the same rows as a
+    fresh fit."""
+    fits = []
+    fit = R._fit_als
+    monkeypatch.setattr(R, "_fit_als", lambda ratings: fits.append(ratings) or fit(ratings))
+    SESSION_CACHE.clear()
+    defs = registry()
+    for name in ALS_QUERIES:
+        assert defs[name].fn(spark, sf_dir).collect(), name
+    assert len(fits) == 2
+
+    ratings = R.ratings_from_events(spark, sf_dir)
+    held = R.train_als(ratings)
+    assert len(fits) == 2
+    fresh = fit(ratings)
+    assert _rows(held.recommendForAllUsers(R.TOP_K)) == _rows(fresh.recommendForAllUsers(R.TOP_K))
+    assert _rows(held.itemFactors) == _rows(fresh.itemFactors)
