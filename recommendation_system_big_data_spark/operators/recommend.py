@@ -5,7 +5,9 @@ exact hyperparameters (model-als.py:111-122: maxIter=10, regParam=0.1,
 rank=10, nonnegative=True, coldStartStrategy='drop', seed fixed), with the
 collect-loop unnest antipattern (model-als.py:134-139) replaced by a single
 `explode` plan (op #44) and the enrichment join expressed as in
-queries/flagship.py.
+queries/flagship.py. The serving step, `recommendForUserSubset`
+(model-als.py:132), scores on the driver from held factors
+(`serving.ServingALSModel`).
 
 All ALS queries are ⊘ rows-only (SURVEY.md §5.2): factorization output is
 seed- and partitioning-sensitive, so the driver checks rows/schema and the
@@ -14,11 +16,16 @@ pytest suite checks the RMSE tolerance gate mirroring model-als.py:127-129.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recommendation_system_big_data_spark.catalog import SESSION_CACHE, load
 from recommendation_system_big_data_spark.registry import register
+
+if TYPE_CHECKING:
+    from recommendation_system_big_data_spark.operators.serving import ServingALSModel
 
 #: Reference hyperparameters, model-als.py:111-120.
 ALS_PARAMS = dict(maxIter=10, regParam=0.1, rank=10, nonnegative=True)
@@ -36,19 +43,21 @@ def ratings_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def train_als(ratings: DataFrame):
-    """ALS with the reference hyperparameters fitted on ``ratings``, once
-    per ratings plan and input-file fingerprint (`catalog.SESSION_CACHE`):
-    the seeded fit is deterministic, so a held model equals a fresh one. A
-    plan the cache may not hold (over an RDD) is fitted on every call."""
+def train_als(ratings: DataFrame) -> ServingALSModel:
+    """A `serving.ServingALSModel`: ALS with the reference hyperparameters
+    fitted on ``ratings``, once per ratings plan and input-file fingerprint
+    (`catalog.SESSION_CACHE`): the seeded fit is deterministic, so a held
+    model equals a fresh one. A held model also keeps the factors its
+    ``recommendForUserSubset`` pulled to the driver. A plan the cache may not
+    hold (over an RDD) is fitted on every call."""
     held = SESSION_CACHE.get_for("als_fit", (ratings,), lambda: _fit_als(ratings))
     return _fit_als(ratings) if held is None else held
 
 
-def _fit_als(ratings: DataFrame):
-    from pyspark.ml.recommendation import ALS
+def _fit_als(ratings: DataFrame) -> ServingALSModel:
+    from recommendation_system_big_data_spark.operators.serving import ServingALS
 
-    als = ALS(
+    als = ServingALS(
         userCol="user_id",
         itemCol="item_id",
         ratingCol="rating",
@@ -144,16 +153,15 @@ def als_recommend_user_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row user table from a local collection (`spark.createDataFrame([(id,)],
     ["user_id"])`), call `recommendForUserSubset(df, 30)`, and flatten. The
     reference flattened via `.collect()` + a Python list round-trip; here the
-    ARRAY<STRUCT> explodes inside the plan (op #44), so nothing leaves the
-    executors. ⊘ rows-only — factor matrices are seed/partitioning-sensitive;
-    shape gated in tests/test_recommend.py."""
+    ARRAY<STRUCT> explodes inside the plan (op #44). ⊘ rows-only — factor
+    matrices are seed/partitioning-sensitive; shape gated in
+    tests/test_recommend.py."""
     n_recs = 30
     ratings = ratings_from_events(spark, sf_dir)
     model = train_als(ratings)
-    # Deterministic existing user: the smallest user_id in the ratings —
-    # built as a 1-row DataFrame without a driver round-trip (the reference
-    # collect()ed the scalar; recommendForUserSubset only needs a DataFrame
-    # of user ids, so the min stays inside the plan).
+    # Deterministic existing user: the smallest user_id in the ratings, as a
+    # 1-row DataFrame. `ServingALSModel.recommendForUserSubset` collects it
+    # (one job) and scores it against the factors held on the driver.
     target_user_df = ratings.select("user_id").orderBy("user_id").limit(1)
     user_recs = model.recommendForUserSubset(target_user_df, n_recs)
     return (
