@@ -12,17 +12,9 @@ memory sizing, and `spark.sql.shuffle.partitions` change (rule of thumb:
 ~2-3× total executor cores, or rely on AQE coalescing from a high initial
 count). Nothing in the engine assumes local mode.
 
-Sessions built here run their Python workers from the engine's daemon
-module (``worker_daemon``). PySpark's worker calls
-``importlib.invalidate_caches()`` at the start of every task; before CPython
-3.12 that makes each zipimporter it holds (~16 for ``pyspark.zip``) re-read
-the archive's whole central directory, most of a 1-row task's cost. The
-daemon makes zipimporter invalidation a no-op before it forks, which is what
-CPython 3.12's lazy invalidation (gh-103200) saves. That is safe because no
-archive on a worker's path changes under it: Spark's own zips are fixed for
-the JVM's life, and ``addPyFile`` archives get unique paths that Spark will
-not overwrite. Directory finders are still invalidated, so ``.py`` files
-shipped later still import. Driver-owned sessions keep PySpark's daemon.
+With a local master, sessions built here run their Python workers from the
+daemon module ``rsbd_worker_daemon``, whose docstring says what it saves and
+why that is safe; a cluster master keeps PySpark's daemon.
 """
 
 from __future__ import annotations
@@ -31,10 +23,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Directory holding this package. get_spark puts it first on the Python
-#: workers' path, so they import the engine's daemon module whatever the
-#: driver's working directory.
+#: Directory holding this package and the worker daemon module. get_spark
+#: puts it first on the Python workers' path when they run that daemon, so
+#: they import it whatever the driver's working directory.
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: Module run as the Python-worker daemon of local sessions built here.
+WORKER_DAEMON = "rsbd_worker_daemon"
 
 #: Conf applied by :func:`get_spark` AND re-applied (where runtime-settable)
 #: by :func:`ensure_runtime_conf` so the engine behaves identically under a
@@ -80,22 +75,23 @@ BUILD_ONLY_CONF = {
     "spark.memory.offHeap.size": os.environ.get("RSBD_OFFHEAP", "2g"),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
-    # Every Python task calls importlib.invalidate_caches(); on CPython < 3.12
-    # each of the worker's ~16 pyspark.zip importers then re-reads the
-    # archive's central directory (~1,700 entries). The engine's daemon makes
-    # zipimporter invalidation a no-op before forking, as CPython 3.12 made it
-    # lazy (gh-103200). Safe: the archives on a worker's path never change
-    # (Spark's zips are fixed for the JVM's life; addPyFile archives get
-    # unique paths Spark never overwrites), and directory finders are still
-    # invalidated, so SparkFiles .py files still import. Read when the
-    # SparkContext starts, hence build-only.
-    "spark.python.daemon.module": "recommendation_system_big_data_spark.worker_daemon",
 }
 
 
 def default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     return f"local[{cpus}]" if cpus else "local[*]"
+
+
+def build_conf(master: str, extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """Launch conf of a :func:`get_spark` session on ``master``.
+
+    Only a local master runs the Python workers from WORKER_DAEMON: there the
+    driver's PACKAGE_PARENT is also the workers'.
+    """
+    local = master.startswith("local")
+    daemon = {"spark.python.daemon.module": WORKER_DAEMON} if local else {}
+    return {**RUNTIME_CONF, **BUILD_ONLY_CONF, **daemon, **(extra_conf or {})}
 
 
 def get_spark(
@@ -109,27 +105,35 @@ def get_spark(
     ``shuffle_partitions`` defaults to 32 in local mode — enough to exercise
     multi-partition plans without tiny-task overhead; on a cluster pass the
     core-count-scaled value or leave AQE to coalesce.
-
-    ``spark.executorEnv.PYTHONPATH`` always starts with this package's parent
-    directory (:data:`PACKAGE_PARENT`), ahead of any value in ``extra_conf``,
-    so the Python workers can import the daemon module from any working
-    directory.
     """
-    conf = {**RUNTIME_CONF, **BUILD_ONLY_CONF, **(extra_conf or {})}
-    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
-    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        p for p in (PACKAGE_PARENT, worker_path) if p
-    )
-    builder = SparkSession.builder.appName(app_name).master(master or default_master())
-    for k, v in conf.items():
+    master = master or default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in build_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     builder = builder.config(
         "spark.sql.shuffle.partitions",
         str(shuffle_partitions or int(os.environ.get("RSBD_SHUFFLE_PARTITIONS", "32"))),
     )
     spark = builder.getOrCreate()
+    put_daemon_on_worker_path(spark.sparkContext)
     ensure_runtime_conf(spark)
     return spark
+
+
+def put_daemon_on_worker_path(sc) -> None:
+    """Put PACKAGE_PARENT on the workers' PYTHONPATH if they run WORKER_DAEMON.
+
+    ``sc.environment`` is the worker environment every Python function ships
+    with. It already holds ``spark.executorEnv.PYTHONPATH`` from whichever
+    source set it (spark-defaults.conf, ``--conf``, ``extra_conf``); that
+    value is kept, after PACKAGE_PARENT.
+    """
+    if sc.getConf().get("spark.python.daemon.module") != WORKER_DAEMON:
+        return
+    path = sc.environment.get("PYTHONPATH", "")
+    entries = path.split(os.pathsep) if path else []
+    if PACKAGE_PARENT not in entries:
+        sc.environment["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *entries])
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
