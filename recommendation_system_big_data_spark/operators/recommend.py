@@ -25,7 +25,10 @@ from recommendation_system_big_data_spark.catalog import SESSION_CACHE, load
 from recommendation_system_big_data_spark.registry import register
 
 if TYPE_CHECKING:
-    from recommendation_system_big_data_spark.operators.serving import ServingALSModel
+    from recommendation_system_big_data_spark.operators.serving import (
+        ServingALS,
+        ServingALSModel,
+    )
 
 #: Reference hyperparameters, model-als.py:111-120.
 ALS_PARAMS = dict(maxIter=10, regParam=0.1, rank=10, nonnegative=True)
@@ -54,18 +57,53 @@ def train_als(ratings: DataFrame) -> ServingALSModel:
     return _fit_als(ratings) if held is None else held
 
 
-def _fit_als(ratings: DataFrame) -> ServingALSModel:
+def _als(**overrides) -> ServingALS:
+    """The ALS estimator over ``user_id``/``item_id``/``rating``: seeded,
+    cold-start rows dropped, `ALS_PARAMS` with ``overrides`` applied."""
     from recommendation_system_big_data_spark.operators.serving import ServingALS
 
-    als = ServingALS(
+    return ServingALS(
         userCol="user_id",
         itemCol="item_id",
         ratingCol="rating",
         coldStartStrategy="drop",
         seed=SEED,
-        **ALS_PARAMS,
+        **{**ALS_PARAMS, **overrides},
     )
-    return als.fit(ratings)
+
+
+def _fit_als(ratings: DataFrame) -> ServingALSModel:
+    return _als().fit(ratings)
+
+
+def _flat(recs: DataFrame) -> DataFrame:
+    """ALS ``recommendations`` lists → one row per entry: ``user_id, item_id,
+    rank_pos`` (longs, rank_pos from 1), in the list's order."""
+    return recs.select("user_id", F.posexplode("recommendations").alias("pos", "rec")).select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("rec.item_id").cast("long").alias("item_id"),
+        (F.col("pos") + 1).cast("long").alias("rank_pos"),
+    )
+
+
+def _rmse(model: ServingALSModel, test: DataFrame) -> float | None:
+    """RMSE of ``model`` over its evaluable predictions on ``test`` (NULL and
+    NaN predictions dropped). None when there are none: a corpus too small to
+    populate the held-out split, or whose test users are all cold-start
+    dropped, is no evidence of a broken factorization, and the evaluator's
+    summarizer would crash on the empty frame."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    predictions = model.transform(test).where(
+        F.col("prediction").isNotNull() & ~F.isnan("prediction")
+    )
+    if predictions.limit(1).count() == 0:
+        return None
+    return float(
+        RegressionEvaluator(
+            metricName="rmse", labelCol="rating", predictionCol="prediction"
+        ).evaluate(predictions)
+    )
 
 
 @register("als_recommend_topk", oracle=None, tags=("ml",))
@@ -75,16 +113,7 @@ def als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference did this flatten with a driver-side Python loop
     (model-als.py:134-139); here it is one logical plan end-to-end."""
     ratings = ratings_from_events(spark, sf_dir)
-    model = train_als(ratings)
-    recs = model.recommendForAllUsers(TOP_K)
-    flat = recs.select(
-        "user_id", F.posexplode("recommendations").alias("pos", "rec")
-    )
-    return flat.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("rec.item_id").cast("long").alias("item_id"),
-        (F.col("pos") + 1).cast("long").alias("rank_pos"),
-    )
+    return _flat(train_als(ratings).recommendForAllUsers(TOP_K))
 
 
 def item_table(dim: DataFrame, ratings: DataFrame) -> DataFrame:
@@ -163,15 +192,7 @@ def als_recommend_user_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row DataFrame. `ServingALSModel.recommendForUserSubset` collects it
     # (one job) and scores it against the factors held on the driver.
     target_user_df = ratings.select("user_id").orderBy("user_id").limit(1)
-    user_recs = model.recommendForUserSubset(target_user_df, n_recs)
-    return (
-        user_recs.select("user_id", F.posexplode("recommendations").alias("pos", "rec"))
-        .select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("rec.item_id").cast("long").alias("item_id"),
-            (F.col("pos") + 1).cast("long").alias("rank_pos"),
-        )
-    )
+    return _flat(model.recommendForUserSubset(target_user_df, n_recs))
 
 
 @register("als_predict", oracle=None, tags=("ml",))
@@ -206,35 +227,16 @@ def als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     RMSE_BAND — the driver's ⊘ rows-only check can't see values, so an
     out-of-band factorization must surface as a query ERROR, not a
     quietly green 1-row result (VERDICT r11 #7)."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-
     ratings = ratings_from_events(spark, sf_dir)
     train, test = ratings.randomSplit([0.8, 0.2], seed=SEED)
-    model = train_als(train)
-    predictions = model.transform(test).where(
-        F.col("prediction").isNotNull() & ~F.isnan("prediction")
-    )
-    # a corpus too small to populate the held-out split (or whose test
-    # users are all cold-start-dropped) has NO evaluable predictions:
-    # report NULL rmse instead of crashing inside the evaluator's empty
-    # summarizer, and skip the band check — no evidence is not a broken
-    # factorization. r13 tiny-fixture rows-only probe finding.
-    if predictions.limit(1).count() == 0:
-        return load(spark, sf_dir, "events").sparkSession.createDataFrame(
-            [("rmse", None)], "metric string, value double"
-        )
-    rmse = RegressionEvaluator(
-        metricName="rmse", labelCol="rating", predictionCol="prediction"
-    ).evaluate(predictions)
+    rmse = _rmse(train_als(train), test)
     lo, hi = RMSE_BAND
-    if not (lo < float(rmse) < hi):
+    if rmse is not None and not (lo < rmse < hi):
         raise ValueError(
             f"als_rmse out of band: rmse={rmse!r} not in ({lo}, {hi}) — "
             "the factorization is broken (see RMSE_BAND)"
         )
-    return load(spark, sf_dir, "events").sparkSession.createDataFrame(
-        [("rmse", float(rmse))], ["metric", "value"]
-    )
+    return spark.createDataFrame([("rmse", rmse)], "metric string, value double")
 
 
 @register("als_enriched_recs", oracle=None, tags=("ml",))
@@ -246,11 +248,7 @@ def als_enriched_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ratings = ratings_from_events(spark, sf_dir)
     model = train_als(ratings)
-    flat = (
-        model.recommendForAllUsers(TOP_K)
-        .select("user_id", F.explode("recommendations").alias("rec"))
-        .select("user_id", F.col("rec.item_id").alias("item_id"), F.col("rec.rating").alias("score"))
-    )
+    flat = _flat(model.recommendForAllUsers(TOP_K))
     # item_avg joins unhinted: AQE broadcasts it at runtime while the item
     # catalog is small, and falls back gracefully if it isn't (VERDICT r1 #2).
     item_avg = ratings.groupBy("item_id").agg(F.avg("rating").alias("avg_rating"))
@@ -260,8 +258,8 @@ def als_enriched_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("item_id").cast("long").alias("item_id"),
+            "user_id",
+            "item_id",
             F.round("avg_rating", 6).alias("avg_rating"),
             F.col("rn").cast("long").alias("rn"),
         )
@@ -284,55 +282,28 @@ def als_param_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, not data). ⊘ rows-only: ALS factors are solver-specific;
     the monotone-sanity and determinism gates live in
     tests/test_recommend.py."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-    from pyspark.ml.recommendation import ALS
-
     ratings = ratings_from_events(spark, sf_dir)
     train, val = ratings.randomSplit([0.8, 0.2], seed=SEED)
     train = train.cache()
     val = val.cache()
-    evaluator = RegressionEvaluator(
-        metricName="rmse", labelCol="rating", predictionCol="prediction"
-    )
-    rows = []
-    for rank in (5, 10):
-        for reg in (0.05, 0.1):
-            model = ALS(
-                userCol="user_id",
-                itemCol="item_id",
-                ratingCol="rating",
-                coldStartStrategy="drop",
-                seed=SEED,
-                maxIter=5,  # screening-depth iterations: the grid ranks
-                # candidates; the winner is refit at full depth (train_als)
-                nonnegative=True,
-                rank=rank,
-                regParam=reg,
-            ).fit(train)
-            preds = model.transform(val).where(
-                F.col("prediction").isNotNull() & ~F.isnan("prediction")
-            )
-            # empty evaluable validation set (tiny corpus / all
-            # cold-start-dropped): NULL rmse, not an evaluator crash —
-            # r13 tiny-fixture rows-only probe finding.
-            if preds.limit(1).count() == 0:
-                rows.append((rank, float(reg), None))
-            else:
-                rows.append(
-                    (rank, float(reg), float(evaluator.evaluate(preds)))
-                )
+    # screening-depth iterations: the grid ranks candidates; the winner is
+    # refit at full depth (train_als)
+    rows = [
+        (rank, float(reg), _rmse(_als(maxIter=5, rank=rank, regParam=reg).fit(train), val))
+        for rank in (5, 10)
+        for reg in (0.05, 0.1)
+    ]
     train.unpersist()
     val.unpersist()
-    scored = [r[2] for r in rows if r[2] is not None]
-    best = min(scored) if scored else None
+    best = min((rmse for _, _, rmse in rows if rmse is not None), default=None)
     out = [
         (
-            r[0],
-            r[1],
-            round(r[2], 6) if r[2] is not None else None,
-            1 if (r[2] is not None and r[2] == best) else 0,
+            rank,
+            reg,
+            None if rmse is None else round(rmse, 6),
+            int(rmse is not None and rmse == best),
         )
-        for r in rows
+        for rank, reg, rmse in rows
     ]
     return spark.createDataFrame(
         out, "rank long, reg_param double, val_rmse double, is_best long"

@@ -90,3 +90,40 @@ def test_als_item_similarity_invariants(spark, sf_dir):
         assert len(ranked) == 5, (item, ranked)
         cosines = [c for _, c in ranked]
         assert cosines == sorted(cosines, reverse=True), (item, cosines)
+
+
+def test_flattened_lists_follow_the_models_ranking(spark, sf_dir):
+    """The flattened outputs carry the model's own lists: als_recommend_topk's
+    item at rank_pos p is the p-th entry of the user's recommendForAllUsers
+    list, als_recommend_user_subset's rows are recommendForUserSubset's list
+    in order, and every als_enriched_recs item is in its user's top-TOP_K."""
+    from recommendation_system_big_data_spark.operators.recommend import (
+        als_enriched_recs,
+        train_als,
+    )
+
+    model = train_als(ratings_from_events(spark, sf_dir))
+    top = {
+        r["user_id"]: [rec["item_id"] for rec in r["recommendations"]]
+        for r in model.recommendForAllUsers(TOP_K).collect()
+    }
+    by_user: dict[int, dict[int, int]] = {}
+    for r in als_recommend_topk(spark, sf_dir).collect():
+        by_user.setdefault(r["user_id"], {})[r["rank_pos"]] = r["item_id"]
+    assert {
+        user: [ranks.get(p) for p in range(1, TOP_K + 1)] for user, ranks in by_user.items()
+    } == top
+
+    user = min(top)
+    subset = model.recommendForUserSubset(
+        spark.createDataFrame([(user,)], "user_id int"), 30
+    ).collect()[0]["recommendations"]
+    rows = sorted(als_recommend_user_subset(spark, sf_dir).collect(), key=lambda r: r["rank_pos"])
+    assert [(r["user_id"], r["item_id"], r["rank_pos"]) for r in rows] == [
+        (user, rec["item_id"], p) for p, rec in enumerate(subset, start=1)
+    ]
+
+    enriched = als_enriched_recs(spark, sf_dir).collect()
+    assert enriched
+    for r in enriched:
+        assert r["item_id"] in top[r["user_id"]], r

@@ -1,8 +1,8 @@
-"""Generate PLANS.md — a physical-plan audit of every bench headline
-query: shuffle count, broadcast joins, nested-loop joins, Python
+"""Generate PLANS.md — a physical-plan audit of the `AUDITED` registry
+queries: shuffle count, broadcast joins, nested-loop joins, Python
 boundaries, and scan pushdown, read from the live Catalyst plans.
 
-Usage: PYTHONPATH=/root/repo python tools/plan_audit.py [sf_dir]
+Usage: python tools/plan_audit.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -14,12 +14,11 @@ import sys
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
 from recommendation_system_big_data_spark.plans import explain  # noqa: E402
 from recommendation_system_big_data_spark.registry import registry  # noqa: E402
 from recommendation_system_big_data_spark.session import get_spark  # noqa: E402
 
-HEADER = """# PLANS — physical-plan audit of the bench headline set
+HEADER = """# PLANS — physical-plan audit of the scale-bearing registry queries
 
 Generated by `tools/plan_audit.py` from the live Catalyst plans at
 {sf_dir}. Columns: exchanges (shuffles) in the static plan, broadcast
@@ -69,10 +68,89 @@ No data×data nested loop appears anywhere.
 """
 
 
-#: Non-headline queries whose plans are audited alongside the bench set —
-#: the r12 session's structurally notable additions (prefix-sum kernels,
-#: bounded pairwise joins, the state-reader round-trip).
-EXTRA_AUDIT = [
+#: The audited queries, each once. First the scale-bearing pipelines,
+#: joins, aggregates, window/top-k, text, dedup and similarity paths ...
+AUDITED = [
+    "flagship_top_customers",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "topk_per_user",
+    "tumbling_window_agg",
+    "session_window_agg",
+    "text_tfidf",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "sim_topk_bruteforce",
+    "agg_summary",
+    "agg_summary_approx",
+    "dedup_exact",
+    "window_running_sum",
+    "json_extract",
+    "q18_large_volume_customers",
+    "sim_topk_lsh",
+    "dedup_incremental_exact",
+    "grouped_pandas_slope",
+    "pipeline_training_mix",
+    "q7_nation_volume",
+    "q8_market_share",
+    "q13_customer_distribution",
+    "q22_sales_opportunity",
+    "text_gopher_quality",
+    "contamination_ngram_check",
+    "dedup_paragraph_exact",
+    "reshape_pivot",
+    "rollup_incremental_agg",
+    "knn_classify",
+    "agg_cube_revenue",
+    "join_range_bucketed",
+    "ts_gapfill_ffill",
+    "max_concurrent_intervals",
+    "fuzzy_join_levenshtein",
+    "embedding_standardize",
+    "graph_triangle_count",
+    "basket_rules_lift",
+    "window_rolling_zscore",
+    "ts_lag_features",
+    "diff_snapshots",
+    "feature_binning_equidepth",
+    "sql_recursive_reachability",
+    "ml_eval_auc_roc",
+    "ts_rolling_active_users",
+    "join_bloom_prefilter",
+    "agg_weighted_percentile",
+    "ts_max_drawdown",
+    "pipeline_rag_prep",
+    "ml_naive_bayes_langid",
+    "stat_bootstrap_ci",
+    "ts_interval_union_coverage",
+    "sim_topk_pq_adc",
+    "dedup_incremental_near_minhash",
+    "dedup_substring_span",
+    "pipeline_sequence_packing",
+    "geo_proximity_join_blocked",
+    "sim_topk_ivfpq",
+    "text_bm25_retrieval",
+    "pipeline_temperature_mix",
+    "text_bpe_pair_stats",
+    "dedup_semantic_semdedup",
+    "dedup_cluster_representatives",
+    "text_ccnet_quality_buckets",
+    "text_repetition_signals",
+    "text_dsir_importance",
+    "sim_topk_truncated_rerank",
+    "pipeline_dedup_cascade",
+    "ml_eval_pr_auc",
+    "embedding_hard_negative_mining",
+    "ts_holt_winters_seasonal",
+    "stat_permutation_test",
+    "privacy_rare_token_redaction",
+    "dedup_prefix_filter_join",
+    "ml_psm_att",
+    "text_mattr_lexical_diversity",
+    "text_heaps_vocab_growth",
+    # ... then the structurally notable later additions: prefix-sum
+    # kernels, bounded pairwise joins, the state-reader round-trip.
     "stat_kruskal_wallis",
     "ml_eval_qini_auuc",
     "ml_conformal_interval",
@@ -116,10 +194,8 @@ EXTRA_AUDIT = [
     "stat_runs_test",
     "stat_benjamini_hochberg",
     "stat_two_proportion_z",
-    "ml_psm_att",
     "ts_hurst_exponent",
     "privacy_dp_quantile",
-    "text_mattr_lexical_diversity",
     "graph_hits",
     # r15 session additions (all 18 new operators)
     "stat_welch_anova",
@@ -175,7 +251,7 @@ def main() -> None:
     spark = get_spark(app_name="plan-audit", master="local[4]", shuffle_partitions=8)
     defs = registry()
     rows = []
-    for name in list(HEADLINE) + EXTRA_AUDIT:
+    for name in AUDITED:
         df = defs[name].fn(spark, sf_dir)
         plan = explain.physical_plan(df)
         shuffles = explain.num_shuffles(df)
