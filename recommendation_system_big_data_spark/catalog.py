@@ -27,7 +27,8 @@ Session cache contract (`SESSION_CACHE`):
   for queries tagged pure (re-executed through a fresh QueryExecution on
   each call, never reused), the dedup shingle index / hot-shingle set, the
   fitted IVF / coarse / PQ models, and, keyed on frames, the recommender's
-  fitted ALS models and per-item enrichment table (`operators/recommend.py`).
+  fitted ALS models and per-item enrichment index, a driver-side Arrow
+  table (`operators/recommend.py`).
 - **Held plans**: a plan is held only when every leaf of it reads files or
   no data at all (`frame_inputs`); a plan over an RDD (``localCheckpoint``,
   ``createDataFrame``) would reuse its materialised data, and a source whose

@@ -41,6 +41,17 @@ def duck():
     con.close()
 
 
+def count_jobs(spark, group: str, fn):
+    """Run ``fn`` under a fresh job group; (result, Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _norm(v):
     """Normalize a cell for cross-engine comparison."""
     if v is None:

@@ -13,6 +13,7 @@ from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, 
 from recommendation_system_big_data_spark.operators import recommend as R
 from recommendation_system_big_data_spark.operators import serving
 from recommendation_system_big_data_spark.sources.csv import read_csv_reference
+from tests.conftest import count_jobs
 
 RATINGS_SCHEMA = StructType([
     StructField("user_id", IntegerType()),
@@ -79,17 +80,6 @@ def _answer(df) -> dict[int, list[tuple[int, float]]]:
 def _mllib(model, dataset, k):
     """MLlib's own subset plan on the same fitted model."""
     return ALSModel.recommendForUserSubset(model, dataset, k)
-
-
-def _jobs(spark, group: str, fn):
-    """Run ``fn`` under a fresh job group; (result, jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_served_equals_mllib_for_every_user(spark, seeded):
@@ -171,8 +161,9 @@ def test_top_k_ties_break_on_item_id():
 
 def test_serve_job_budget(spark, seeded, tmp_path):
     """On a file-backed one-user frame: the subset call runs one job (the id
-    read), collecting its answer none, and the whole request (subset,
-    flatten, the reference enrichment, collect) at most three."""
+    read), collecting its answer none; the whole request (subset, flatten,
+    the reference enrichment) runs exactly two, the enrichment's read of the
+    list being the second, and collecting the request's answer none."""
     model, ratings, dim = seeded[2]
     one = read_csv_reference(
         spark, _write_csv(tmp_path / "one.csv", "user_id", [(4,)]), StructType([RATINGS_SCHEMA[0]])
@@ -182,12 +173,15 @@ def test_serve_job_budget(spark, seeded, tmp_path):
         recs = model.recommendForUserSubset(one, K).select(
             "user_id", F.posexplode("recommendations").alias("pos", "rec")
         ).select(F.col("rec.item_id").alias("anime_id"), (F.col("pos") + 1).alias("rank_pos"))
-        return R.enrich_and_rank(recs, dim, ratings, "TV").collect()
+        return R.enrich_and_rank(recs, dim, ratings, "TV")
 
-    warm = request()  # pulls the factors and builds the held item table
-    answer, subset_jobs = _jobs(spark, "serve-subset", lambda: model.recommendForUserSubset(one, K))
+    warm = request().collect()  # pulls the factors and builds the held item index
+    answer, subset_jobs = count_jobs(
+        spark, "serve-subset", lambda: model.recommendForUserSubset(one, K)
+    )
     assert subset_jobs == 1
-    rows, collect_jobs = _jobs(spark, "serve-collect", answer.collect)
+    rows, collect_jobs = count_jobs(spark, "serve-collect", answer.collect)
     assert collect_jobs == 0 and [r["user_id"] for r in rows] == [4]
-    again, request_jobs = _jobs(spark, "serve-request", request)
-    assert request_jobs <= 3 and again == warm and warm
+    served, request_jobs = count_jobs(spark, "serve-request", request)
+    again, answer_jobs = count_jobs(spark, "serve-answer", served.collect)
+    assert request_jobs == 2 and answer_jobs == 0 and again == warm and warm

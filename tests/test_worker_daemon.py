@@ -1,30 +1,43 @@
 """Python workers of engine-built local sessions run the engine's daemon module
-(``rsbd_worker_daemon``): zipimporter invalidation is a no-op in every worker,
-a module shipped with ``addPyFile`` after the first task still imports, and
-the workers find the daemon module whatever the driver's working directory
-and wherever the caller's own worker path comes from. A cluster master keeps
-PySpark's daemon."""
+(``rsbd_worker_daemon``) when it is there, over Unix domain sockets when a
+socket path fits: zipimporter invalidation is a no-op in every worker, a
+module shipped with ``addPyFile`` after the first task still imports, the
+workers find the daemon module whatever the driver's working directory and
+wherever the caller's own worker path comes from, and UDFs, accumulators and
+local data reach the workers over the sockets. A cluster master keeps
+PySpark's daemon and TCP."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import stat
 import subprocess
 import sys
+import tempfile
 import uuid
 import zipfile
 
 import pytest
+from pyspark.accumulators import AccumulatorUnixServer
+from pyspark.errors import IllegalArgumentException
+from pyspark.sql import functions as F
 
+from recommendation_system_big_data_spark import session
 from recommendation_system_big_data_spark.session import (
+    MAX_SOCKET_DIR,
     PACKAGE_PARENT,
     WORKER_DAEMON,
     build_conf,
     put_daemon_on_worker_path,
+    uds_dir,
 )
 
 DAEMON_KEY = "spark.python.daemon.module"
 WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
+UDS_KEY = "spark.python.unix.domain.socket.enabled"
+UDS_DIR_KEY = "spark.python.unix.domain.socket.dir"
 
 
 def test_python_tasks_run_the_engine_daemon(spark):
@@ -57,6 +70,7 @@ class _Context:
 def test_cluster_master_keeps_pysparks_daemon_and_worker_path(master):
     conf = build_conf(master, {"spark.ui.enabled": "true"})
     assert DAEMON_KEY not in conf and WORKER_PATH_KEY not in conf
+    assert UDS_KEY not in conf and UDS_DIR_KEY not in conf  # TCP
     assert conf["spark.ui.enabled"] == "true"
     sc = _Context(conf.get(DAEMON_KEY), "/caller")
     put_daemon_on_worker_path(sc)
@@ -71,6 +85,125 @@ def test_local_master_runs_the_engine_daemon_first_on_the_worker_path():
         put_daemon_on_worker_path(sc)
     assert bare.environment == {"PYTHONPATH": PACKAGE_PARENT}
     assert caller.environment == {"PYTHONPATH": os.pathsep.join([PACKAGE_PARENT, "/caller"])}
+
+
+def test_local_master_without_the_daemon_file_keeps_pysparks_daemon(monkeypatch, tmp_path):
+    # A copy of the package without the top-level module: selecting it
+    # would fail every Python task at the daemon's start.
+    monkeypatch.setattr(session, "PACKAGE_PARENT", str(tmp_path))
+    assert DAEMON_KEY not in build_conf("local[2]")
+
+
+def test_local_master_uses_a_private_socket_dir():
+    conf = build_conf("local[2]")
+    path = conf[UDS_DIR_KEY]
+    assert conf[UDS_KEY] == "true" and path == uds_dir()
+    assert stat.S_IMODE(os.stat(path).st_mode) == 0o700
+    assert os.path.dirname(path) in (tempfile.gettempdir(), session.FALLBACK_TEMP_DIR)
+    off = {UDS_KEY: "false"}
+    assert build_conf("local[2]", off)[UDS_KEY] == "false"  # the caller's conf wins
+
+
+@pytest.fixture
+def temp_dirs(monkeypatch):
+    """Set tempfile's directory and the fallback, on a fresh uds_dir."""
+
+    def use(temp, fallback=session.FALLBACK_TEMP_DIR):
+        monkeypatch.setattr(tempfile, "tempdir", temp)
+        monkeypatch.setattr(session, "FALLBACK_TEMP_DIR", fallback)
+        uds_dir.cache_clear()
+
+    yield use
+    uds_dir.cache_clear()
+
+
+def _dir_of_length(base: str, made: str, total: int, fill: str) -> str:
+    """A new directory under ``base`` such that a directory named like
+    ``made`` under it has a path of ``total`` bytes."""
+    path = os.path.join(base, fill * (total - len(base + "/" + "/" + made)))
+    os.mkdir(path)
+    return path
+
+
+def _spark_accepts_socket_dir(spark, path: str) -> bool:
+    jvm = spark._jvm
+    entry = jvm.org.apache.spark.internal.config.Python.PYTHON_UNIX_DOMAIN_SOCKET_DIR()
+    conf = jvm.org.apache.spark.SparkConf(False).set(UDS_DIR_KEY, path)
+    try:
+        conf.get(entry)
+    except IllegalArgumentException:
+        return False
+    return True
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_socket_dir_too_long_keeps_tcp(spark, temp_dirs, extra):
+    """A socket dir of MAX_SOCKET_DIR bytes keeps UDS; one byte more, which
+    Spark's own conf check refuses, keeps TCP when the fallback is as long
+    too."""
+    base = tempfile.mkdtemp(prefix="u")
+    made = os.path.basename(tempfile.mkdtemp(prefix="uds", dir=base))
+    temp = _dir_of_length(base, made, MAX_SOCKET_DIR + extra, "t")
+    fallback = _dir_of_length(base, made, MAX_SOCKET_DIR + 1, "f")
+    try:
+        temp_dirs(temp, fallback)
+        conf = build_conf("local[2]")
+        if extra:
+            assert UDS_KEY not in conf and UDS_DIR_KEY not in conf
+            assert not _spark_accepts_socket_dir(spark, os.path.join(temp, made))
+        else:
+            assert os.path.dirname(conf[UDS_DIR_KEY]) == temp
+            assert _spark_accepts_socket_dir(spark, conf[UDS_DIR_KEY])
+        assert os.listdir(fallback) == []
+    finally:
+        shutil.rmtree(base)
+
+
+def test_long_temp_dir_falls_back_to_a_short_one(temp_dirs, tmp_path):
+    temp = tmp_path / ("d" * MAX_SOCKET_DIR)
+    temp.mkdir()
+    temp_dirs(str(temp))
+    conf = build_conf("local[2]")
+    assert conf[UDS_KEY] == "true"
+    assert os.path.dirname(conf[UDS_DIR_KEY]) == session.FALLBACK_TEMP_DIR
+    assert os.listdir(temp) == []
+
+
+def test_python_work_runs_over_unix_sockets(spark):
+    """The shared session: a Python UDF's worker holds Unix sockets and no
+    TCP one, accumulator updates come back through the driver's Unix socket
+    server, and a frame made from a local list reads back."""
+    sc = spark.sparkContext
+    sockets = sc.getConf().get(UDS_DIR_KEY)
+    assert sc.getConf().get(UDS_KEY) == "true"
+    assert stat.S_IMODE(os.stat(sockets).st_mode) == 0o700
+
+    def socket_families(_):
+        import os
+        import socket
+
+        families = set()
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                s = socket.socket(fileno=int(fd))
+            except OSError:
+                continue
+            families.add(s.family.name)
+            s.detach()
+        return "/".join(sorted(families))
+
+    got = spark.range(2).select(F.udf(socket_families, "string")("id").alias("f")).collect()
+    assert [r.f for r in got] == ["AF_UNIX", "AF_UNIX"]
+
+    server = sc._accumulatorServer
+    assert isinstance(server, AccumulatorUnixServer)
+    assert os.path.dirname(server.server_address) == sockets
+    total = sc.accumulator(0)
+    sc.parallelize(range(10), 2).foreach(lambda x: total.add(x))
+    assert total.value == 45
+
+    rows = spark.createDataFrame([(1, "a"), (2, None)], "id int, s string").collect()
+    assert [tuple(r) for r in rows] == [(1, "a"), (2, None)]
 
 
 def test_files_added_after_the_first_task_still_import(spark, tmp_path):
