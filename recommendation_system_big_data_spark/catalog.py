@@ -21,14 +21,18 @@ Session cache contract (`SESSION_CACHE`):
   ``file:`` URIs (the form Spark reports); an input the local file system
   cannot see, or one under any other scheme, is never cached.
 - **Bound**: at most `SessionCache.MAX_ENTRIES` entries, least recently used
-  evicted first; an evicted or stale persisted frame is unpersisted.
+  evicted first; an evicted or stale persisted frame is unpersisted, and
+  every entry whose build looked it up goes with it, so a held plan never
+  outlives the persisted frame it reads (it would recompute the frame from
+  its lineage on every call).
 - **Users**: `load` (the listing and parquet schema-inference job are
   saved; the scan runs on every execution), the registry's prepared plans
   for queries tagged pure (re-executed through a fresh QueryExecution on
   each call, never reused), the dedup shingle index / hot-shingle set, the
-  fitted IVF / coarse / PQ models, and, keyed on frames, the recommender's
-  fitted ALS models and per-item enrichment index, a driver-side Arrow
-  table (`operators/recommend.py`).
+  BM25 inverted index (`functions/text.py`), the fitted IVF / coarse / PQ
+  models, and, keyed on frames, the recommender's fitted ALS models and
+  per-item enrichment index, a driver-side Arrow table
+  (`operators/recommend.py`).
 - **Held plans**: a plan is held only when every leaf of it reads files or
   no data at all (`frame_inputs`); a plan over an RDD (``localCheckpoint``,
   ``createDataFrame``) would reuse its materialised data, and a source whose
@@ -161,6 +165,7 @@ class _Entry:
     value: object
     fingerprint: dict  # input path → _file_stats at build time
     persisted: bool  # the build persisted the frame; unpersist on drop
+    deps: set  # keys of the entries the build looked up
 
 
 class SessionCache:
@@ -176,7 +181,7 @@ class SessionCache:
     def __init__(self) -> None:
         self._entries: OrderedDict[tuple, _Entry] = OrderedDict()
         self._lock = threading.Lock()
-        # per thread: one fingerprint dict per build in progress
+        # per thread: one entry per build in progress
         self._building = threading.local()
 
     def __len__(self) -> int:
@@ -213,17 +218,24 @@ class SessionCache:
             entry = self._build(build, inputs)
             if None not in entry.fingerprint.values():
                 with self._lock:
-                    evicted = [self._entries.pop(full)] if full in self._entries else []
+                    old = self._entries.pop(full, None)
+                    doomed = [] if old is None else [(full, old)]
                     self._entries[full] = entry
                     while len(self._entries) > self.MAX_ENTRIES:
-                        evicted.append(self._entries.popitem(last=False)[1])
-                _unpersist(evicted)
+                        doomed.append(self._entries.popitem(last=False))
+                    # and every entry built on a dropped persisted frame
+                    gone = {k for k, e in doomed if e.persisted}
+                    while gone:
+                        gone = {k for k, e in self._entries.items() if not gone.isdisjoint(e.deps)}
+                        doomed += [(k, self._entries.pop(k)) for k in gone]
+                _unpersist([e for _, e in doomed])
         else:
             with self._lock:
                 if full in self._entries:
                     self._entries.move_to_end(full)
-        for fingerprint in self._stack():
-            _merge(fingerprint, entry.fingerprint)
+        for outer in self._stack():
+            _merge(outer.fingerprint, entry.fingerprint)
+            outer.deps.add(full)
         return entry.value
 
     def get_for(self, kind: str, frames: tuple[DataFrame, ...], build: Callable[[], object]):
@@ -252,23 +264,24 @@ class SessionCache:
             dropped = [self._entries.pop(k) for k in keys]
         _unpersist(dropped)
 
-    def _stack(self) -> list[dict]:
+    def _stack(self) -> list[_Entry]:
         return self._building.__dict__.setdefault("stack", [])
 
     def _build(self, build: Callable[[], object], inputs: tuple[str, ...]) -> _Entry:
         # inputs are stat'ed before the build reads them, so a rewrite
         # during the build shows as a change on the next lookup
-        fingerprint = {}
+        entry = _Entry(None, {}, False, set())
         for p in inputs:
             local = _local_path(p)
-            fingerprint[local or p] = None if local is None else _file_stats(local)
+            entry.fingerprint[local or p] = None if local is None else _file_stats(local)
         stack = self._stack()
-        stack.append(fingerprint)
+        stack.append(entry)
         try:
-            value = build()
+            entry.value = build()
         finally:
             stack.pop()
-        return _Entry(value, fingerprint, bool(getattr(value, "is_cached", False)))
+        entry.persisted = bool(getattr(entry.value, "is_cached", False))
+        return entry
 
 
 def _unpersist(entries: list[_Entry]) -> None:

@@ -7,17 +7,20 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
+import duckdb
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from recommendation_system_big_data_spark.catalog import SESSION_CACHE, SessionCache, load
+from recommendation_system_big_data_spark.functions import text as T
 from recommendation_system_big_data_spark.functions.vectors import as_double_array
 from recommendation_system_big_data_spark.operators import dedup as D
 from recommendation_system_big_data_spark.operators import recommend as R
 from recommendation_system_big_data_spark.operators import similarity as S
 from recommendation_system_big_data_spark.registry import PURE, get_query, preparable, registry
+from tests.conftest import assert_oracle_match
 
-#: The analytics queries the benchmark cycles, less text_bm25_retrieval.
+#: The analytics queries the benchmark cycles; the registry prepares all nine.
 PREPARED_MIX = (
     "flagship_top_customers",
     "q1_pricing_summary",
@@ -25,6 +28,7 @@ PREPARED_MIX = (
     "q5_local_supplier_volume",
     "q18_large_volume_customers",
     "agg_summary_approx",
+    "text_bm25_retrieval",
     "sim_topk_bruteforce",
     "text_tfidf",
 )
@@ -75,16 +79,31 @@ def _rows(df) -> list:
     return sorted(map(repr, df.collect()))
 
 
+def _assert_bm25_oracle(sdf, sf_dir: str) -> None:
+    """``sdf`` has the BM25 oracle's rows over ``sf_dir``'s documents."""
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+        assert_oracle_match(sdf, con, get_query("text_bm25_retrieval").oracle, "bm25")
+    finally:
+        con.close()
+
+
 def test_rewritten_inputs_invalidate_every_entry(spark, sf_dir, tmp_path):
     """Rewriting documents/embeddings in the same session rebuilds every
     entry built from them — the shingle index, the hot-shingle set, the
-    IVF centroids, the PQ codebooks, the memoised load and a prepared
-    plan — and each returns the new data."""
+    IVF centroids, the PQ codebooks, the memoised load, the BM25 index and
+    the prepared plans over them — and each returns the new data; the old
+    persisted indexes are unpersisted."""
     d = str(tmp_path)
     for t in ("documents", "embeddings"):
         pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet"), f"{d}/{t}.parquet")
     tfidf = get_query("text_tfidf").fn
+    bm25 = get_query("text_bm25_retrieval").fn
 
+    hits = _rows(bm25(spark, d))
+    bm25_idx = T.bm25_index(spark, d)
+    assert bm25_idx.storageLevel.useMemory
     idx = D.shingle_index(spark, d)
     hot = D.hot_shingle_set(spark, d, 1)
     hot_rows = _rows(hot)
@@ -118,6 +137,13 @@ def test_rewritten_inputs_invalidate_every_entry(spark, sf_dir, tmp_path):
     assert load(spark, d, "documents").count() == n_docs < n_before
     new_words = _rows(tfidf(spark, d))
     assert new_words == _rows(tfidf.__wrapped__(spark, d)) and new_words != words
+    # storageLevel looks the plan up in Spark's cache manager: read it
+    # before a new index over the same path is persisted
+    assert bm25_idx.storageLevel.useMemory is False
+    new_hits = bm25(spark, d)
+    _assert_bm25_oracle(new_hits, d)
+    assert _rows(new_hits) != hits
+    assert T.bm25_index(spark, d) is not bm25_idx
 
 
 def test_prepared_call_does_its_own_work(spark, sf_dir):
@@ -141,18 +167,17 @@ def test_prepared_call_does_its_own_work(spark, sf_dir):
         assert sorted(map(repr, got)) == sorted(map(repr, want)), name
 
 
-def test_bm25_is_never_prepared(spark, sf_dir):
-    """text_bm25_retrieval reads a localCheckpoint RDD: re-executing a held
-    plan would skip its tokenize stage, so it is not tagged pure and the
-    registry refuses such a plan even if it were."""
-    from recommendation_system_big_data_spark.functions.text import text_bm25_retrieval
-
-    q = get_query("text_bm25_retrieval")
-    assert PURE not in q.tags
-    assert q.fn is text_bm25_retrieval
-    assert not preparable(text_bm25_retrieval(spark, sf_dir))
+def test_bm25_is_prepared(spark, sf_dir):
+    """text_bm25_retrieval reads only files and the held BM25 index, so it
+    is tagged pure and its plan may be held. The registry still refuses a
+    plan over a localCheckpoint RDD, such as pipeline_dedup_cascade's:
+    re-executing it would skip the checkpointed stages."""
+    assert PURE in get_query("text_bm25_retrieval").tags
     for name in PREPARED_MIX:
         assert preparable(get_query(name).fn.__wrapped__(spark, sf_dir)), name
+    cascade = get_query("pipeline_dedup_cascade")
+    assert PURE not in cascade.tags
+    assert not preparable(cascade.fn(spark, sf_dir))
 
 
 def test_prepared_call_repins_runtime_conf(spark, sf_dir):
@@ -180,6 +205,34 @@ def test_shingle_index_bounded_eviction(spark, sf_dir):
         SESSION_CACHE.get(spark, ("filler", i), lambda: i)
     assert len(SESSION_CACHE) <= SessionCache.MAX_ENTRIES
     assert a.storageLevel.useMemory is False
+    SESSION_CACHE.clear()
+
+
+def test_bm25_index_eviction_takes_its_plan(spark, sf_dir):
+    """Filler entries that evict the BM25 index unpersist it and drop the
+    prepared plan built on it, so no held plan recomputes the index on
+    every call; the next prepared call rebuilds both and still returns the
+    oracle's rows."""
+    SESSION_CACHE.clear()
+    a = T.bm25_index(spark, sf_dir)
+    bm25 = get_query("text_bm25_retrieval").fn
+    bm25(spark, sf_dir).collect()
+    assert a.storageLevel.useMemory and a.rdd.getNumPartitions() == 1
+    app_id = spark.sparkContext.applicationId
+    index_key = (app_id, "bm25_index", sf_dir)
+    plan_key = (app_id, "query", "text_bm25_retrieval", sf_dir)
+    # the plan is used more recently than the index: plain LRU order
+    # would evict the index first and keep the plan
+    for i in range(SessionCache.MAX_ENTRIES):
+        if index_key not in SESSION_CACHE:
+            break
+        SESSION_CACHE.get(spark, ("filler", i), lambda: i)
+    assert index_key not in SESSION_CACHE and plan_key not in SESSION_CACHE
+    assert a.storageLevel.useMemory is False
+    _assert_bm25_oracle(bm25(spark, sf_dir), sf_dir)
+    assert plan_key in SESSION_CACHE
+    b = T.bm25_index(spark, sf_dir)
+    assert b is not a and b.storageLevel.useMemory
     SESSION_CACHE.clear()
 
 
