@@ -8,6 +8,8 @@ actually happened (`test_plans.py`), and are the tool for the
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -39,20 +41,39 @@ def read_schema(df: DataFrame) -> str:
     )
 
 
+#: One node of a formatted plan tree: its branch marker, codegen star,
+#: name and id (``+- * HashAggregate (4)``), or an AQE section header.
+_NODE = re.compile(r"(?:[+:]- )?(?:\* )?(?P<name>== \w+ Plan ==|\w+)(?: \((?P<id>\d+)\))?")
+
+
 def num_shuffles(df: DataFrame) -> int:
-    """Count true shuffle exchanges (SURVEY.md §7.2: every P2+ operator
-    documents its shuffle count — this verifies it). Counts only the
-    numbered node list of the formatted plan (each node appears once there;
-    the tree rendering above it would double-count), and excludes
-    BroadcastExchange — broadcasts move the small side only, which is
-    exactly the point of using them."""
-    plan = physical_plan(df)
-    n = 0
-    for line in plan.splitlines():
-        line = line.strip()
-        if line.startswith("(") and ") Exchange" in line and "Broadcast" not in line:
-            n += 1
-    return n
+    """Count the shuffle exchanges the plan runs (SURVEY.md §7.2: every P2+
+    operator documents its shuffle count — this verifies it). Reads the
+    node trees of the formatted plan, the main one and any subquery's, and
+    counts each ``Exchange`` node id once. Skipped: BroadcastExchange
+    (broadcasts move the small side only, which is exactly the point of
+    using them), ReusedExchange, the subtree under an ``InMemoryRelation``
+    (a cached plan a call reads, not runs), and AQE's ``Initial Plan``
+    section, which the final or current plan listed beside it replaced."""
+    ids, in_tree, skip_at = set(), False, None
+    for line in physical_plan(df).splitlines():
+        if line == "== Physical Plan ==" or line.startswith("Subquery:"):
+            in_tree, skip_at = True, None
+            continue
+        if not line.strip():
+            in_tree = False
+        if not in_tree:
+            continue
+        col = len(line) - len(line.lstrip(" :|"))
+        if skip_at is not None and col > skip_at:
+            continue
+        skip_at = None
+        node = _NODE.match(line, col)
+        if node and node["name"] in ("== Initial Plan ==", "InMemoryRelation"):
+            skip_at = col
+        elif node and node["name"] == "Exchange":
+            ids.add(node["id"])
+    return len(ids)
 
 
 def whole_stage_codegen_spans(df: DataFrame) -> int:
@@ -61,8 +82,6 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
     text = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "codegen"
     )
-    import re
-
     # Zero case: "Found 0 WholeStageCodegen subtrees."
     # Nonzero: one "== Subtree i / N ... ==" header per compiled subtree.
     m = re.search(r"Found (\d+) WholeStageCodegen", text)

@@ -693,3 +693,24 @@ def test_zipf_topk_is_take_ordered(spark, sf_dir):
 
     plan = explain.physical_plan(text_zipf_fit(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_num_shuffles_counts_what_a_run_runs(spark):
+    """A final AQE plan lists its initial plan too, and a query over a
+    persisted frame lists the cached plan under its InMemoryRelation:
+    neither runs, so neither counts, before or after the collect."""
+    keyed = spark.range(0, 100, 1, 4).withColumn("k", F.col("id") % 5)
+    grouped = keyed.groupBy("k").count()
+    assert explain.num_shuffles(grouped) == 1
+    grouped.collect()
+    assert explain.num_shuffles(grouped) == 1, explain.physical_plan(grouped)
+
+    held = keyed.groupBy("k").agg(F.sum("id").alias("s")).persist()
+    try:
+        held.count()
+        over = held.groupBy((F.col("k") % 2).alias("p")).agg(F.sum("s"))
+        assert explain.num_shuffles(over) == 1, explain.physical_plan(over)
+        over.collect()
+        assert explain.num_shuffles(over) == 1, explain.physical_plan(over)
+    finally:
+        held.unpersist()

@@ -741,8 +741,7 @@ def test_payload_bytestats_empty_payload_cross_engine(spark, tmp_path):
     the chi² exit, while the oracle silently dropped the doc. Plant one
     empty and one normal doc and require BOTH engines to agree on the
     decided semantics: empty payloads emit no row."""
-    import duckdb
-
+    from recommendation_system_big_data_spark import oracle
     from recommendation_system_big_data_spark.operators.multimodal import (
         multimodal_payload_bytestats,
     )
@@ -753,25 +752,17 @@ def test_payload_bytestats_empty_payload_cross_engine(spark, tmp_path):
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
 
-    got = {r["doc_id"]: r for r in
-           multimodal_payload_bytestats(spark, str(tmp_path)).collect()}
+    sdf = multimodal_payload_bytestats(spark, str(tmp_path))
+    got = {r["doc_id"]: r for r in sdf.collect()}
     assert set(got) == {1}
     assert got[1]["n_bytes"] == 3 and got[1]["distinct_bytes"] == 2
     assert got[1]["modal_byte_freq"] == 2
     assert got[1]["chi2_uniform_milli"] == (256 * 5 * 1000) // 3 - 3000
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{tmp_path}/documents.parquet/*.parquet'"
-    )
-    oracle_rows = con.execute(
-        registry()["multimodal_payload_bytestats"].oracle
-    ).fetchall()
-    assert sorted(oracle_rows) == sorted(
-        (r["doc_id"], r["n_bytes"], r["distinct_bytes"], r["modal_byte_freq"],
-         r["chi2_uniform_milli"]) for r in got.values()
-    )
+    with oracle.connect(tmp_path) as con:
+        sql = registry()["multimodal_payload_bytestats"].oracle
+        problem = oracle.diff(sdf.columns, got.values(), *oracle.fetch(con, sql), oracle.exact)
+    assert problem is None, problem
 
 
 def test_hard_negative_mining_unique_label_anchor_cross_engine(spark, tmp_path):
@@ -779,8 +770,7 @@ def test_hard_negative_mining_unique_label_anchor_cross_engine(spark, tmp_path):
     positive candidate — Spark used to keep a NULL-field row where the
     oracle's inner join dropped the anchor. Plant that distribution and
     require both engines to agree: the anchor emits no row."""
-    import duckdb
-
+    from recommendation_system_big_data_spark import oracle
     from recommendation_system_big_data_spark.operators.similarity import (
         embedding_hard_negative_mining,
     )
@@ -798,21 +788,12 @@ def test_hard_negative_mining_unique_label_anchor_cross_engine(spark, tmp_path):
         vecs, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
 
-    got = sorted(
-        tuple(r) for r in
-        embedding_hard_negative_mining(spark, str(tmp_path)).collect()
-    )
+    sdf = embedding_hard_negative_mining(spark, str(tmp_path))
+    got = sdf.collect()
     assert [r[0] for r in got] == [0], got
     assert all(v is not None for r in got for v in r)
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{tmp_path}/embeddings.parquet/*.parquet'"
-    )
-    oracle_rows = sorted(
-        tuple(r) for r in con.execute(
-            registry()["embedding_hard_negative_mining"].oracle
-        ).fetchall()
-    )
-    assert oracle_rows == got
+    with oracle.connect(tmp_path) as con:
+        sql = registry()["embedding_hard_negative_mining"].oracle
+        problem = oracle.diff(sdf.columns, got, *oracle.fetch(con, sql), oracle.exact)
+    assert problem is None, problem

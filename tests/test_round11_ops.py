@@ -232,9 +232,9 @@ def test_anova_exact_in_the_wrap_domain(spark, tmp_path):
     never reaches. Require cross-engine agreement with DuckDB's HUGEINT
     oracle AND a big-int sequential replay (which would both have
     exposed the wrap)."""
-    import duckdb
     import math
 
+    from recommendation_system_big_data_spark.oracle import connect
     from recommendation_system_big_data_spark.operators.stats_tests import (
         ANOVA_QUANT,
         stat_anova_oneway,
@@ -260,11 +260,7 @@ def test_anova_exact_in_the_wrap_domain(spark, tmp_path):
         (sum(v) ** 2) // len(v) > 2**63 for v in groups.values()
     ), "planted frame no longer reaches the wrap domain"
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"'{tmp_path}/events.parquet/*.parquet'"
-    )
+    con = connect(tmp_path)
     oracle = con.execute(registry()["stat_anova_oneway"].oracle).fetchall()[0]
     assert tuple(got) == tuple(oracle), (tuple(got), tuple(oracle))
 

@@ -99,8 +99,7 @@ def test_stump_hist_zero_range_corpus(spark, duck, tmp_path):
     must bin to 0 on BOTH engines instead of NaN-splitting. Plant a
     constant-value events table and require the Spark result to match
     the DuckDB oracle exactly."""
-    import duckdb
-
+    from recommendation_system_big_data_spark.oracle import connect
     from recommendation_system_big_data_spark.operators.ml_eval import (
         _STUMP_HIST_ORACLE,
         ml_decision_stump_hist,
@@ -116,10 +115,7 @@ def test_stump_hist_zero_range_corpus(spark, duck, tmp_path):
         rows, "event_id long, user_id long, event_type string, value double"
     ).write.parquet(sf + "/events.parquet")
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
+    con = connect(sf)
     sdf = ml_decision_stump_hist(spark, sf)
     # Both engines must agree (the pre-fix Spark plan NaN-binned and
     # diverged from DuckDB here). A zero-range corpus collapses to one
@@ -174,8 +170,7 @@ def test_brier_exact_in_the_wrap_domain(spark, tmp_path):
     math wrapped (ADVICE r10; fix 0191e9d/28eb903 moved the terms to
     DECIMAL). Require cross-engine agreement with DuckDB's HUGEINT
     oracle AND a big-int sequential replay."""
-    import duckdb
-
+    from recommendation_system_big_data_spark.oracle import connect
     from recommendation_system_big_data_spark.operators.ml_eval import (
         _BRIER_ORACLE,
         ml_eval_brier_decomposition,
@@ -198,11 +193,7 @@ def test_brier_exact_in_the_wrap_domain(spark, tmp_path):
     d_top = 4000 * 1000000
     assert d_top * d_top > 2**63, "planted frame left the wrap domain"
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"'{tmp_path}/events.parquet/*.parquet'"
-    )
+    con = connect(tmp_path)
     oracle = con.execute(_BRIER_ORACLE).fetchall()[0]
     assert tuple(got) == tuple(oracle), (tuple(got), tuple(oracle))
 
@@ -274,7 +265,7 @@ def test_assortativity_basket_cap_bites_on_pathological_order(spark, tmp_path):
     C(32,2) = 496 edges (the MAX_BASKET cap), not C(100,2) = 4950 — and
     the capped semantics must agree cross-engine with the oracle's
     identically-capped SQL on the same planted frame."""
-    import duckdb
+    from recommendation_system_big_data_spark.oracle import connect
 
     from recommendation_system_big_data_spark.operators.graph import (
         MAX_BASKET,
@@ -297,11 +288,7 @@ def test_assortativity_basket_cap_bites_on_pathological_order(spark, tmp_path):
     assert got["n_edges"] == want_edges, got
     assert got["n_nodes"] == MAX_BASKET + 3
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"'{tmp_path}/lineitem.parquet/*.parquet'"
-    )
+    con = connect(tmp_path)
     oracle = con.execute(_ASSORT_ORACLE).fetchall()[0]
     assert tuple(got) == tuple(oracle), (tuple(got), tuple(oracle))
     con.close()
@@ -1801,8 +1788,7 @@ def test_degenerate_constant_corpus_agrees_cross_engine(spark, tmp_path):
     inference/eval ops the r12 probe caught raising)."""
     import datetime
 
-    import duckdb
-
+    from recommendation_system_big_data_spark.oracle import connect
     from recommendation_system_big_data_spark.operators.ml_eval import (
         _MCC_ORACLE,
         ml_eval_mcc,
@@ -1834,10 +1820,7 @@ def test_degenerate_constant_corpus_agrees_cross_engine(spark, tmp_path):
         " value double, props string",
     ).coalesce(1).write.parquet(sf + "/events.parquet")
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
-    )
+    con = connect(sf)
     for fn, oracle, name in [
         (stat_ttest_welch, _TTEST_ORACLE, "ttest"),
         (stat_mann_whitney, _MWU_ORACLE, "mwu"),

@@ -10,17 +10,8 @@ import datetime
 
 import duckdb
 
+from recommendation_system_big_data_spark import oracle
 from tests.conftest import assert_oracle_match
-
-
-def _duck(views: dict[str, str]):
-    con = duckdb.connect()
-    for name, path in views.items():
-        con.execute(
-            f"CREATE VIEW {name} AS"
-            f" SELECT * FROM '{path}/*.parquet'"
-        )
-    return con
 
 
 def test_degenerate_single_class_and_single_day_events(spark, tmp_path):
@@ -64,7 +55,7 @@ def test_degenerate_single_class_and_single_day_events(spark, tmp_path):
     assert ro["poisson_gof_chi2"] is None
     assert ro["overdispersed"] is None
 
-    con = _duck({"events": sf + "/events.parquet"})
+    con = oracle.connect(sf)
     assert_oracle_match(ll, con, _LOGLOSS_ORACLE, "degenerate_log_loss")
     assert_oracle_match(od, con, _OVERDISP_ORACLE, "degenerate_overdisp")
     con.close()
@@ -121,10 +112,7 @@ def test_degenerate_fairness_single_class_segments(spark, tmp_path):
     # the gaps range over defined rates only (MAX/MIN skip NULLs)
     assert got["AUTOMOBILE"]["tpr_gap_micros"] is not None
 
-    con = _duck({
-        "customer": sf + "/customer.parquet",
-        "orders": sf + "/orders.parquet",
-    })
+    con = oracle.connect(sf)
     assert_oracle_match(fg, con, _FAIRNESS_ORACLE, "degenerate_fairness")
     con.close()
 
@@ -151,7 +139,7 @@ def test_degenerate_gi_star_zero_variance_grid(spark, tmp_path):
     assert len(rows) == 24 * 36
     assert all(r["gi_z"] is None and r["n_points"] == 0 for r in rows)
 
-    con = _duck({"customer": sf + "/customer.parquet"})
+    con = oracle.connect(sf)
     assert_oracle_match(gi, con, _GI_ORACLE, "degenerate_gi_star")
     con.close()
 
@@ -187,10 +175,7 @@ def test_degenerate_flat_price_elasticity_cross_engine(spark, tmp_path):
     ).coalesce(1).write.parquet(sf + "/part.parquet")
 
     el = olap_price_elasticity(spark, sf)
-    con = _duck({
-        "lineitem": sf + "/lineitem.parquet",
-        "part": sf + "/part.parquet",
-    })
+    con = oracle.connect(sf)
     assert_oracle_match(el, con, _ELASTICITY_ORACLE, "degenerate_elasticity")
     con.close()
 

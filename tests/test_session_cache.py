@@ -7,10 +7,10 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
-import duckdb
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from recommendation_system_big_data_spark import oracle
 from recommendation_system_big_data_spark.catalog import SESSION_CACHE, SessionCache, load
 from recommendation_system_big_data_spark.functions import text as T
 from recommendation_system_big_data_spark.functions.vectors import as_double_array
@@ -81,12 +81,8 @@ def _rows(df) -> list:
 
 def _assert_bm25_oracle(sdf, sf_dir: str) -> None:
     """``sdf`` has the BM25 oracle's rows over ``sf_dir``'s documents."""
-    con = duckdb.connect()
-    try:
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    with oracle.connect(sf_dir) as con:
         assert_oracle_match(sdf, con, get_query("text_bm25_retrieval").oracle, "bm25")
-    finally:
-        con.close()
 
 
 def test_rewritten_inputs_invalidate_every_entry(spark, sf_dir, tmp_path):

@@ -581,9 +581,9 @@ def test_zero_norm_prefix_guard_cross_engine(spark, tmp_path):
     NULL scores and include the planted vector, and (b) the Spark result
     equals the DuckDB oracle CELL-EXACTLY on the planted corpus — the
     divergence the advice predicted, reproduced and pinned."""
-    import duckdb
     import numpy as np
 
+    from recommendation_system_big_data_spark import oracle
     from recommendation_system_big_data_spark.operators.similarity import (
         MRL_DIM,
         embedding_matryoshka_eval,
@@ -604,28 +604,19 @@ def test_zero_norm_prefix_guard_cross_engine(spark, tmp_path):
     path = str(tmp_path / "embeddings.parquet")
     df.coalesce(1).write.parquet(path)
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM parquet_scan('{path}/*.parquet')"
-    )
+    con = oracle.connect(tmp_path)
     R = registry()
     for name, fn in (
         ("sim_topk_truncated_rerank", sim_topk_truncated_rerank),
         ("embedding_matryoshka_eval", embedding_matryoshka_eval),
     ):
         sdf = fn(spark, str(tmp_path))
-        srows = sorted(
-            tuple(repr(v) for v in r) for r in sdf.collect()
+        rows = sdf.collect()
+        assert all(v is not None for r in rows for v in r), (name, rows[:3])
+        problem = oracle.diff(
+            sdf.columns, rows, *oracle.fetch(con, R[name].oracle), oracle.exact
         )
-        assert all("None" not in r for r in srows), (name, srows[:3])
-        res = con.execute(R[name].oracle)
-        dcols = [d[0] for d in res.description]
-        idx = [dcols.index(c) for c in sdf.columns]
-        orows = sorted(
-            tuple(repr(float(r[i]) if isinstance(r[i], float) else r[i]) for i in idx)
-            for r in res.fetchall()
-        )
-        assert srows == orows, (name, srows[:3], orows[:3])
+        assert problem is None, (name, problem)
 
 
 def test_recall_audits_carry_floor_flags(spark, sf_dir):

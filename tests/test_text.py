@@ -6,12 +6,12 @@ from __future__ import annotations
 
 import random
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from recommendation_system_big_data_spark import oracle
 from recommendation_system_big_data_spark.functions.text import rolling_hash, tokens
 from tests.conftest import assert_oracle_match
 
@@ -229,12 +229,8 @@ def test_bm25_differential_vs_sequential_reference(spark, sf_dir, tmp_path, case
     assert not mism, list(mism.items())[:5]
     if case != "testdata":
         _BM25_CASES[case][1](got)
-        con = duckdb.connect()
-        try:
-            con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+        with oracle.connect(sf_dir) as con:
             assert_oracle_match(result, con, _BM25_ORACLE, case)
-        finally:
-            con.close()
 
 
 def test_bm25_index_partitions_follow_corpus_size(spark, sf_dir, tmp_path):
@@ -255,11 +251,7 @@ def test_bm25_index_partitions_follow_corpus_size(spark, sf_dir, tmp_path):
     spark.conf.set(key, str(-(-table_bytes(d, "documents") // 3)))
     try:
         assert bm25_index(spark, d).rdd.getNumPartitions() == 3
-        con = duckdb.connect()
-        try:
-            con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
+        with oracle.connect(d) as con:
             assert_oracle_match(text_bm25_retrieval(spark, d), con, _BM25_ORACLE, "bm25")
-        finally:
-            con.close()
     finally:
         spark.conf.unset(key)

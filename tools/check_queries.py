@@ -1,61 +1,65 @@
-"""Spot-check named registry queries against their oracles (drive_full's
-compare, but only for the names given on argv). Usage:
-    python tools/check_queries.py [--sf DIR] name [name ...]
+"""Check registry queries against their DuckDB oracles the way the driver
+does: a vanilla SparkSession, every ``__spark_entry__.queries()`` entry (or
+the names given), oracle-diffed where ``oracle_sql()`` has one and
+row-counted otherwise. Usage:
+
+    python tools/check_queries.py [--sf DIR] [--exact] [name ...]
+
+``--sf`` defaults to the driver's sf0.01. ``--exact`` compares cells by
+``oracle.exact`` (repr, as the driver's value hash) instead of
+``oracle.rounded``. A run over every query appends one record to
+SWEEPS.jsonl; a run over some names writes none. Exits 1 on any failure.
 """
-import os, sys, math, time
+import argparse
+import os
+import sys
+import time
+
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from pyspark.sql import SparkSession
-import duckdb
 
-args = sys.argv[1:]
-SF = "/root/testdata/sf0.001"
-if args and args[0] == "--sf":
-    SF = args[1]; args = args[2:]
+from pyspark.sql import SparkSession  # noqa: E402
 
-from recommendation_system_big_data_spark.registry import registry
+import __spark_entry__ as E  # noqa: E402
+from recommendation_system_big_data_spark import oracle  # noqa: E402
+from recommendation_system_big_data_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 
-spark = (SparkSession.builder.master("local[8]").appName("check")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.ui.enabled", "false").getOrCreate())
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"))
+    ap.add_argument("--exact", action="store_true")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    cell = oracle.exact if args.exact else oracle.rounded
 
-def norm(v):
-    if v is None: return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 9)
-    if hasattr(v, "item"): return norm(v.item())
-    return v
-
-R = registry()
-fails = []
-for name in args:
-    qd = R[name]; t0 = time.time()
-    try:
-        sdf = qd.fn(spark, SF)
-        if qd.oracle:
-            srows = sorted([tuple(norm(v) for v in r) for r in sdf.collect()], key=repr)
-            res = con.execute(qd.oracle)
-            dcols = [d[0] for d in res.description]
-            idx = [dcols.index(c) for c in sdf.columns]
-            drows = sorted([tuple(norm(r[i]) for i in idx) for r in res.fetchall()], key=repr)
-            ok = srows == drows
-            if not ok:
-                fails.append(name)
-                sonly = [r for r in srows if r not in drows][:3]
-                donly = [r for r in drows if r not in srows][:3]
-                print(f"FAIL {name} spark={len(srows)} duck={len(drows)}")
-                print("  spark-only:", sonly)
-                print("  duck-only :", donly)
+    spark = (SparkSession.builder.master("local[8]").appName("check-queries")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    queries, oracles = E.queries(), E.oracle_sql()
+    con = oracle.connect(args.sf)
+    fails, t_start = [], time.time()
+    for name in args.names or queries:
+        t0 = time.time()
+        try:
+            sdf = queries[name](spark, args.sf)
+            if name in oracles:
+                rows = sdf.collect()
+                problem = oracle.diff(sdf.columns, rows, *oracle.fetch(con, oracles[name]), cell)
+                status, detail = ("FAIL", problem) if problem else ("OK", f"{len(rows)} rows")
             else:
-                print(f"OK   {name} {len(srows)} rows {time.time()-t0:.1f}s")
-        else:
-            print(f"ROWS {name} {sdf.count()} {time.time()-t0:.1f}s")
-    except Exception as e:
-        fails.append(name)
-        print(f"ERR  {name}: {e}")
-print("FAILS:", fails or "none")
-spark.stop()
-sys.exit(1 if fails else 0)
+                status, detail = "ROWS", str(sdf.count())
+        except Exception as e:
+            status, detail = "ERROR", f"{type(e).__name__}: {str(e)[:160]}"
+        if status in ("FAIL", "ERROR"):
+            fails.append(name)
+        print(f"{status:5} {name} {detail} {time.time() - t0:.1f}s", flush=True)
+    wall = round(time.time() - t_start, 1)
+    print(f"TOTAL {wall:.0f}s FAILS: {fails or 'none'}")
+    if not args.names:
+        oracle.append_sweep(sf=args.sf, n_queries=len(queries),
+                            n_oracle=sum(n in oracles for n in queries), fails=fails, wall_s=wall)
+    spark.stop()
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

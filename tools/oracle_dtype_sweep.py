@@ -24,15 +24,10 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def _kind(col: pd.Series) -> str:
@@ -79,17 +74,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])  # optional query-name filter
 
+    from recommendation_system_big_data_spark import oracle
     from recommendation_system_big_data_spark.registry import registry
     from recommendation_system_big_data_spark.session import get_spark
 
     reg = registry()
     spark = get_spark()
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle.connect(sf_dir)
 
     hazards: list[str] = []
     checked = 0

@@ -20,28 +20,22 @@ Writes one JSON line per fixture to SWEEPS.jsonl (tag degenerate_probe).
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import shutil
-import subprocess
 import sys
 import time
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
+from recommendation_system_big_data_spark import oracle  # noqa: E402
+from recommendation_system_big_data_spark.catalog import TABLES  # noqa: E402
+
 BASE = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def _write_like(src: str, dst: str, df: pd.DataFrame) -> None:
@@ -127,16 +121,6 @@ def build_fixture(kind: str, root: str) -> str:
     return out
 
 
-def norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 9)
-    if hasattr(v, "item"):
-        return norm(v.item())
-    return v
-
-
 def clear_session_caches() -> None:
     """Session-persisted index caches are keyed per sf_dir, but clear them
     anyway so no fixture reads another's materialization (the r9
@@ -176,23 +160,11 @@ def main() -> None:
         and (q.oracle is not None or include_rows_only)
         and (only is None or n in only)
     }
-    try:
-        head = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-    except Exception:
-        head = "unknown"
-
     exit_code = 0
     for kind in kinds:
         sf = build_fixture(kind, root)
         clear_session_caches()
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'"
-            )
+        con = oracle.connect(sf)
         fails, t_start = [], time.time()
         for name, qd in canon.items():
             t0 = time.time()
@@ -204,21 +176,12 @@ def main() -> None:
                     # corpus is still a finding.
                     sdf.count()
                     continue
-                srows = sorted(
-                    [tuple(norm(v) for v in r) for r in sdf.collect()],
-                    key=repr,
+                problem = oracle.diff(
+                    sdf.columns, sdf.collect(), *oracle.fetch(con, qd.oracle)
                 )
-                res = con.execute(qd.oracle)
-                dcols = [d[0] for d in res.description]
-                idx = [dcols.index(c) for c in sdf.columns]
-                drows = sorted(
-                    [tuple(norm(r[i]) for i in idx) for r in res.fetchall()],
-                    key=repr,
-                )
-                if srows != drows:
+                if problem:
                     fails.append(name)
-                    print(f"HASH-FAIL [{kind}] {name} "
-                          f"{len(srows)}/{len(drows)}", flush=True)
+                    print(f"HASH-FAIL [{kind}] {name} {problem}", flush=True)
             except Exception as e:
                 fails.append(name)
                 print(f"ERROR [{kind}] {name} "
@@ -235,12 +198,8 @@ def main() -> None:
             if fails:
                 exit_code = 1
             continue
-        with open(os.path.join(REPO, "SWEEPS.jsonl"), "a") as fh:
-            fh.write(json.dumps({
-                "tag": "degenerate_probe", "fixture": kind, "ts": time.time(),
-                "n_queries": len(canon), "fails": fails, "wall_s": wall,
-                "head": head,
-            }) + "\n")
+        oracle.append_sweep(tag="degenerate_probe", fixture=kind,
+                            n_queries=len(canon), fails=fails, wall_s=wall)
         if fails:
             exit_code = 1
     spark.stop()

@@ -25,32 +25,30 @@ r10 extension (r9 VERDICT #4): the layout diff alone cannot see the bug
 class that actually killed embedding_covariance's r9 row — a CROSS-ENGINE
 divergence (Spark rounds doubles via exact BigDecimal HALF_UP, DuckDB
 scales-and-rounds the binary double) that is layout-stable on both sides.
-The driver's value-hash compares exact values, while drive_full /
-check_queries normalize floats to round(x, 9) — so a last-ulp cross-engine
-difference is invisible locally until a driver row goes red. For every
-swept query that emits float columns, layout B's rows are therefore ALSO
-compared against the DuckDB oracle with EXACT float repr (no rounding
-forgiveness) — the faithful local reproduction of the driver gate. A flag
-here means the query's float exit path must be converted to integer units
-(the embedding_covariance cov_micros pattern).
+The driver's value-hash compares exact values, while check_queries and
+Tier-1 round floats to 9 decimals (``oracle.rounded``) — so a last-ulp
+cross-engine difference is invisible locally until a driver row goes red.
+For every swept query that emits float columns, layout B's rows are
+therefore ALSO diffed against the DuckDB oracle under ``oracle.exact`` (no
+rounding forgiveness) — the faithful local reproduction of the driver gate.
+A flag here means the query's float exit path must be converted to integer
+units (the embedding_covariance cov_micros pattern).
 
 Usage:
     python tools/ulp_partition_sweep.py [--sf DIR] [name ...]
 Writes one JSON line to SWEEPS.jsonl (tag: ulp_partition_sweep) and exits
 non-zero on any A≠B diff or exact-repr oracle diff.
 """
-import json
 import os
 import sys
 import time
-from decimal import Decimal
 
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from recommendation_system_big_data_spark import oracle  # noqa: E402
 from recommendation_system_big_data_spark.registry import registry  # noqa: E402
 
 args = sys.argv[1:]
@@ -86,49 +84,15 @@ def _clear_session_caches():
     SESSION_CACHE.clear()
 
 
-def _norm_exact(v):
-    """repr-exact normalization: floats by exact repr (the driver-hash
-    standard — NO round(9) forgiveness), Decimals value-normalized so
-    trailing-zero scale differences between engines don't false-flag."""
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, Decimal):
-        return "D" + str(v.normalize())
-    if hasattr(v, "item"):
-        return _norm_exact(v.item())
-    return repr(v)
-
-
 def run(name, shuffle, split_bytes):
     _clear_session_caches()
     spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
     df = R[name].fn(spark, SF)
-    rows = sorted(
-        [tuple(_norm_exact(v) for v in row) for row in df.collect()],
-        key=repr,
-    )
-    return rows, df.columns, [t for _, t in df.dtypes]
+    return df.columns, df.collect(), [t for _, t in df.dtypes]
 
 
-import duckdb  # noqa: E402
-
-con = duckdb.connect()
-for t in (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-):
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-
-def oracle_exact(name, cols):
-    res = con.execute(R[name].oracle)
-    dcols = [d[0] for d in res.description]
-    idx = [dcols.index(c) for c in cols]
-    return sorted(
-        [tuple(_norm_exact(r[i]) for i in idx) for r in res.fetchall()],
-        key=repr,
-    )
+con = oracle.connect(SF)
 
 
 FLOATY = ("float", "double")
@@ -136,27 +100,21 @@ FLOATY = ("float", "double")
 fails, oracle_flags, t0 = [], [], time.time()
 for i, name in enumerate(names):
     try:
-        a, _, _ = run(name, "1", str(128 * 1024 * 1024))
-        b, cols, dtypes = run(name, "37", str(64 * 1024))
-        if a != b:
+        _, a, _ = run(name, "1", str(128 * 1024 * 1024))
+        cols, b, dtypes = run(name, "37", str(64 * 1024))
+        problem = oracle.diff(cols, a, cols, b, oracle.exact)
+        if problem:
             fails.append(name)
-            only_a = [r for r in a if r not in b][:2]
-            only_b = [r for r in b if r not in a][:2]
-            print(f"DIFF {name}: A-only {only_a} B-only {only_b}", flush=True)
+            print(f"DIFF {name} (A as spark, B as oracle): {problem}", flush=True)
             continue
         # Cross-engine exact-repr gate, float-emitting queries only (the
         # knife-edge class; non-float queries are exactly compared by
-        # drive_full already, and datetime repr differences would noise).
+        # check_queries already, and datetime repr differences would noise).
         if any(t in FLOATY for t in dtypes):
-            o = oracle_exact(name, cols)
-            if b != o:
+            problem = oracle.diff(cols, b, *oracle.fetch(con, R[name].oracle), oracle.exact)
+            if problem:
                 oracle_flags.append(name)
-                only_s = [r for r in b if r not in o][:2]
-                only_o = [r for r in o if r not in b][:2]
-                print(
-                    f"ULP  {name}: spark-only {only_s} oracle-only {only_o}",
-                    flush=True,
-                )
+                print(f"ULP  {name}: {problem}", flush=True)
         if (i + 1) % 25 == 0:
             print(f"... {i + 1}/{len(names)} ok ({time.time() - t0:.0f}s)", flush=True)
     except Exception as e:  # pragma: no cover - diagnostic path
@@ -165,15 +123,13 @@ for i, name in enumerate(names):
 
 record = {
     "tag": "ulp_partition_sweep",
-    "ts": int(time.time()),
     "sf": SF,
     "checked": len(names),
     "fails": fails,
     "oracle_ulp_flags": oracle_flags,
     "elapsed_sec": round(time.time() - t0, 1),
 }
-with open(os.path.join(REPO, "SWEEPS.jsonl"), "a") as fh:
-    fh.write(json.dumps(record) + "\n")
-print(json.dumps(record))
+oracle.append_sweep(**record)
+print(record)
 spark.stop()
 sys.exit(1 if fails or oracle_flags else 0)
