@@ -24,6 +24,7 @@ import __spark_entry__ as E  # noqa: E402
 from recommendation_system_big_data_spark import oracle  # noqa: E402
 from recommendation_system_big_data_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--sf", default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"))
