@@ -1,16 +1,15 @@
-"""Spark-vs-DuckDB oracle diff: the local form of the driver's check.
+"""Spark-vs-DuckDB oracle diff for registry queries.
 
-The driver runs each query and its ``oracle_sql()`` entry and passes it
-when the row count, the column names and the rows in any order agree.
-Tests and tools make that check through this module only: ``connect``
-registers the DuckDB views, ``fetch`` runs an oracle, ``diff`` gives the
-verdict under one of two cell rules, and ``append_sweep`` records a
-completed sweep.
+A query passes against its ``oracle_sql()`` entry when the row count, the
+column names and the rows in any order agree. Tests and tools make that
+check through this module only: ``connect`` registers the DuckDB views,
+``fetch`` runs an oracle, ``diff`` gives the verdict under one of two cell
+rules, and ``append_sweep`` records a completed sweep.
 
 - ``rounded``: floats to 9 decimals, NaN as ``"NaN"``. The Tier-1 rule.
 - ``exact``: ``repr`` of every cell, Decimals value-normalised. A last-ulp
-  float difference or ``-0.0`` against ``0.0`` fails here, as it does in
-  the driver's exact value hash.
+  float difference or ``-0.0`` against ``0.0`` fails here, as it does
+  under an exact value hash.
 
 The engine's query path never imports this module, so only tests and
 tools load ``duckdb``.

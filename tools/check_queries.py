@@ -1,12 +1,12 @@
-"""Check registry queries against their DuckDB oracles the way the driver
-does: a vanilla SparkSession, every ``__spark_entry__.queries()`` entry (or
-the names given), oracle-diffed where ``oracle_sql()`` has one and
-row-counted otherwise. Usage:
+"""Check registry queries against their DuckDB oracles under a vanilla
+SparkSession: every ``__spark_entry__.queries()`` entry (or the names
+given), oracle-diffed where ``oracle_sql()`` has one and row-counted
+otherwise. Usage:
 
     python tools/check_queries.py [--sf DIR] [--exact] [name ...]
 
-``--sf`` defaults to the driver's sf0.01. ``--exact`` compares cells by
-``oracle.exact`` (repr, as the driver's value hash) instead of
+``--sf`` defaults to sf0.01. ``--exact`` compares cells by
+``oracle.exact`` (repr, as an exact value hash does) instead of
 ``oracle.rounded``. A run over every query appends one record to
 SWEEPS.jsonl; a run over some names writes none. Exits 1 on any failure.
 """

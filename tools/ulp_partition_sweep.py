@@ -25,14 +25,13 @@ r10 extension (r9 VERDICT #4): the layout diff alone cannot see the bug
 class that actually killed embedding_covariance's r9 row — a CROSS-ENGINE
 divergence (Spark rounds doubles via exact BigDecimal HALF_UP, DuckDB
 scales-and-rounds the binary double) that is layout-stable on both sides.
-The driver's value-hash compares exact values, while check_queries and
+An exact value hash compares exact values, while check_queries and
 Tier-1 round floats to 9 decimals (``oracle.rounded``) — so a last-ulp
-cross-engine difference is invisible locally until a driver row goes red.
-For every swept query that emits float columns, layout B's rows are
-therefore ALSO diffed against the DuckDB oracle under ``oracle.exact`` (no
-rounding forgiveness) — the faithful local reproduction of the driver gate.
-A flag here means the query's float exit path must be converted to integer
-units (the embedding_covariance cov_micros pattern).
+cross-engine difference is invisible to the rounded check. For every
+swept query that emits float columns, layout B's rows are therefore ALSO
+diffed against the DuckDB oracle under ``oracle.exact`` (no rounding
+forgiveness). A flag here means the query's float exit path must be
+converted to integer units (the embedding_covariance cov_micros pattern).
 
 Usage:
     python tools/ulp_partition_sweep.py [--sf DIR] [name ...]
