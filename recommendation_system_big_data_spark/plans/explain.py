@@ -41,8 +41,12 @@ def read_schema(df: DataFrame) -> str:
     )
 
 
+#: The tree lines' indent: spaces, and the ``:`` that continues a
+#: non-last child's branch, up to (not into) a ``:- `` branch marker.
+_INDENT = re.compile(r"(?:[ |]|:(?!-))*")
+
 #: One node of a formatted plan tree: its branch marker, codegen star,
-#: name and id (``+- * HashAggregate (4)``), or an AQE section header.
+#: name and id (``:- * HashAggregate (4)``), or an AQE section header.
 _NODE = re.compile(r"(?:[+:]- )?(?:\* )?(?P<name>== \w+ Plan ==|\w+)(?: \((?P<id>\d+)\))?")
 
 
@@ -64,7 +68,7 @@ def num_shuffles(df: DataFrame) -> int:
             in_tree = False
         if not in_tree:
             continue
-        col = len(line) - len(line.lstrip(" :|"))
+        col = _INDENT.match(line).end()
         if skip_at is not None and col > skip_at:
             continue
         skip_at = None

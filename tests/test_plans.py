@@ -698,19 +698,20 @@ def test_zipf_topk_is_take_ordered(spark, sf_dir):
 def test_num_shuffles_counts_what_a_run_runs(spark):
     """A final AQE plan lists its initial plan too, and a query over a
     persisted frame lists the cached plan under its InMemoryRelation:
-    neither runs, so neither counts, before or after the collect."""
+    neither runs, so neither counts, before or after the collect. A join's
+    first child prints as ``:- Exchange (n)`` and counts."""
     keyed = spark.range(0, 100, 1, 4).withColumn("k", F.col("id") % 5)
-    grouped = keyed.groupBy("k").count()
-    assert explain.num_shuffles(grouped) == 1
-    grouped.collect()
-    assert explain.num_shuffles(grouped) == 1, explain.physical_plan(grouped)
-
+    other = spark.range(0, 50, 1, 3).select((F.col("id") % 7).alias("k"))
     held = keyed.groupBy("k").agg(F.sum("id").alias("s")).persist()
     try:
         held.count()
-        over = held.groupBy((F.col("k") % 2).alias("p")).agg(F.sum("s"))
-        assert explain.num_shuffles(over) == 1, explain.physical_plan(over)
-        over.collect()
-        assert explain.num_shuffles(over) == 1, explain.physical_plan(over)
+        for df, runs in [
+            (keyed.groupBy("k").count(), 1),
+            (keyed.hint("shuffle_hash").join(other, "k"), 2),
+            (held.groupBy((F.col("k") % 2).alias("p")).agg(F.sum("s")), 1),
+        ]:
+            assert explain.num_shuffles(df) == runs, explain.physical_plan(df)
+            df.collect()
+            assert explain.num_shuffles(df) == runs, explain.physical_plan(df)
     finally:
         held.unpersist()
