@@ -22,6 +22,21 @@ against 38-42 ms, 4-vCPU Linux VM).
 The sockets live in a private (0700) directory made once per process
 (`uds_dir`); with no directory short enough for a socket path the session
 keeps TCP. A cluster master keeps PySpark's daemon and TCP.
+
+Every session built here also holds up to 1,000 generated classes in Spark's
+code cache (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
+That cache is one JVM-wide LRU of compiled whole-stage and expression
+classes, keyed by their source text. The benchmark's analytics mix of 9
+queries needs ~150 distinct classes per cycle (~180 in a cold pass). Under
+cyclic access an LRU smaller than its working set evicts every class before
+its next use, so at 100 every call recompiled all of its classes: ~150
+Janino compilations per warm cycle, 8-25 per query; at 1,000 a warm cycle
+compiles none. The conf is static: Spark reads it once, when the JVM first
+loads its code generator, so it is in BUILD_ONLY_CONF and not RUNTIME_CONF. A
+session the engine did not build (an external driver's, a vanilla one) keeps
+Spark's 100 and recompiles as before. RUNTIME_CONF keeps the codegen stage id
+out of class names, so a pipeline that AQE numbers differently from one call
+to the next still finds its cached class.
 """
 
 from __future__ import annotations
@@ -68,6 +83,14 @@ RUNTIME_CONF = {
     # session with ansi=false can't silently turn overflow into nulls.
     # (Spark 4 defaults true; this is a guard, not a behavior change.)
     "spark.sql.ansi.enabled": "true",
+    # Generated whole-stage classes are cached by their source text, and
+    # Spark names each class after its codegen stage id by default. AQE
+    # numbers a plan's stages in the order its query stages finish, which
+    # varies from call to call, so the same pipeline came back under another
+    # id and was compiled again (q5 and text_tfidf, 4 classes each, on some
+    # warm calls). Without the id in the name, its source and its cached
+    # class stay the same; the id only appears in stack traces.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 BUILD_ONLY_CONF = {
@@ -86,6 +109,15 @@ BUILD_ONLY_CONF = {
     "spark.memory.offHeap.size": os.environ.get("RSBD_OFFHEAP", "2g"),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
+    # Spark's generated-class cache is a JVM-wide LRU of 100 classes by
+    # default. The analytics mix cycles through ~150 distinct classes (~180
+    # in a cold pass), and an LRU smaller than a cyclic working set evicts
+    # each class before its next use: every call recompiled every class
+    # (~150 compilations per warm cycle). 1,000 holds that set with 5x
+    # headroom. Static: Spark reads it once, when the JVM first loads its
+    # code generator, so ensure_runtime_conf cannot apply it, and a
+    # driver-owned session keeps 100.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -46,6 +46,16 @@ def count_jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def count_compilations(spark, fn):
+    """Run ``fn``; (result, classes Janino compiled meanwhile). Spark's
+    generated-class cache hands back a class it holds without compiling, so
+    a call whose plans are all held compiles 0."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = timer.getCount()
+    out = fn()
+    return out, timer.getCount() - before
+
+
 def assert_oracle_match(sdf, duck_con, oracle_sql: str, name: str = "") -> None:
     """Driver-equivalent comparison: same row count, same column names,
     same order-insensitive multiset of rows (``oracle.diff``, rounded rule)."""

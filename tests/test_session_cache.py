@@ -18,7 +18,7 @@ from recommendation_system_big_data_spark.operators import dedup as D
 from recommendation_system_big_data_spark.operators import recommend as R
 from recommendation_system_big_data_spark.operators import similarity as S
 from recommendation_system_big_data_spark.registry import PURE, get_query, preparable, registry
-from tests.conftest import assert_oracle_match
+from tests.conftest import assert_oracle_match, count_compilations
 
 #: The analytics queries the benchmark cycles; the registry prepares all nine.
 PREPARED_MIX = (
@@ -161,6 +161,25 @@ def test_prepared_call_does_its_own_work(spark, sf_dir):
         assert (jobs, stages) == (want_jobs, want_stages), name
         assert jobs > 0, name
         assert sorted(map(repr, got)) == sorted(map(repr, want)), name
+
+
+def test_warm_mix_compiles_nothing(spark, sf_dir):
+    """Once two passes over the mix have run, a third compiles no class:
+    the session's generated-class cache holds the mix's whole working set.
+    At Spark's default cap of 100 classes each pass evicted every class
+    before its next use and recompiled ~147 of them."""
+    defs = registry()
+
+    def run_pass():
+        for name in PREPARED_MIX:
+            defs[name].fn(spark, sf_dir).collect()
+
+    run_pass()
+    run_pass()
+    compiled = {}
+    for name in PREPARED_MIX:
+        _, compiled[name] = count_compilations(spark, defs[name].fn(spark, sf_dir).collect)
+    assert sum(compiled.values()) == 0, compiled
 
 
 def test_bm25_is_prepared(spark, sf_dir):

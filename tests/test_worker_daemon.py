@@ -5,7 +5,8 @@ module shipped with ``addPyFile`` after the first task still imports, the
 workers find the daemon module whatever the driver's working directory and
 wherever the caller's own worker path comes from, and UDFs, accumulators and
 local data reach the workers over the sockets. A cluster master keeps
-PySpark's daemon and TCP."""
+PySpark's daemon and TCP. Every master's launch conf holds Spark's
+generated-class cache at 1,000 classes unless the caller sets it."""
 
 from __future__ import annotations
 
@@ -38,6 +39,7 @@ DAEMON_KEY = "spark.python.daemon.module"
 WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 UDS_KEY = "spark.python.unix.domain.socket.enabled"
 UDS_DIR_KEY = "spark.python.unix.domain.socket.dir"
+CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
 
 
 def test_python_tasks_run_the_engine_daemon(spark):
@@ -75,6 +77,12 @@ def test_cluster_master_keeps_pysparks_daemon_and_worker_path(master):
     sc = _Context(conf.get(DAEMON_KEY), "/caller")
     put_daemon_on_worker_path(sc)
     assert sc.environment == {"PYTHONPATH": "/caller"}
+
+
+@pytest.mark.parametrize("master", ["local[2]", "spark://head:7077", "yarn", "k8s://https://api:6443"])
+def test_every_master_holds_a_codegen_cache_of_1000_classes(master):
+    assert build_conf(master)[CODEGEN_CACHE_KEY] == "1000"
+    assert build_conf(master, {CODEGEN_CACHE_KEY: "50"})[CODEGEN_CACHE_KEY] == "50"
 
 
 def test_local_master_runs_the_engine_daemon_first_on_the_worker_path():
